@@ -5,53 +5,45 @@ analogue). Usage:
 
     python scripts/ingest_job.py <input_glob> <timeline_path> [--streaming <checkpoint>]
 
-With --streaming the same operators run as a Structured Streaming drain
-(Trigger.AvailableNow) with exactly-once file accounting.
+Both modes run the stream's per-batch body, ``merge_micro_batch``: one
+Spark action per batch, with the invalid-record histogram printed from
+metrics observed on the timeline write. The batch mode then prints the
+batch's JSON record (rows read, valid, invalid by reason, rows written,
+rewarded rows, reward mass). With --streaming it runs as a
+Structured Streaming drain (Trigger.AvailableNow) with exactly-once file
+accounting.
 """
 
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tracker_trainer_spark.ingest import (  # noqa: E402
-    finalize_for_storage,
-    merge_rewarded_decisions,
-    parse_track_records,
-    split_valid,
-    to_rewarded_decisions,
-    write_timeline,
-)
 from tracker_trainer_spark.ingest.reader import read_track_lines  # noqa: E402
-from tracker_trainer_spark.ingest.validate import invalid_record_histogram  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
+from tracker_trainer_spark.streaming import (  # noqa: E402
+    merge_micro_batch,
+    start_timeline_stream,
+)
+
+
+def _report(hist):
+    for reason, n in sorted(hist.items()):
+        print(f"invalid[{reason}] = {n}")
 
 
 def main() -> None:
     src, timeline = sys.argv[1], sys.argv[2]
     spark = get_spark(app_name="tts-ingest")
     if "--streaming" in sys.argv:
-        from tracker_trainer_spark.streaming import start_timeline_stream
-
         ckpt = sys.argv[sys.argv.index("--streaming") + 1]
-
-        def _report(hist):
-            for reason, n in sorted(hist.items()):
-                print(f"invalid[{reason}] = {n}")
-
         start_timeline_stream(spark, src, timeline, ckpt,
                               on_invalid=_report).awaitTermination()
         return
-    parsed = parse_track_records(read_track_lines(spark, src))
-    valid, _ = split_valid(parsed)
-    hist = invalid_record_histogram(parsed).collect()
-    for r in hist:
-        print(f"invalid[{r.reason}] = {r['count']}")
-    merged = finalize_for_storage(
-        merge_rewarded_decisions(to_rewarded_decisions(valid),
-                                 ("model", "decision_id"))
-    )
-    write_timeline(merged, timeline)
+    record = merge_micro_batch(read_track_lines(spark, src), timeline,
+                               on_invalid=_report)
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

@@ -33,13 +33,22 @@ repaired by groom), so executor memory is flat regardless of stream age.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..ingest.merge import finalize_for_storage, merge_rewarded_decisions
 from ..ingest.project import to_rewarded_decisions
 from ..ingest.reader import parse_track_records
 from ..ingest.sink import MAX_RECORDS_PER_FILE, write_timeline
-from ..ingest.validate import split_valid
+from ..ingest.validate import INVALID_REASONS, REASON_COL, with_invalid_reason
+from ..observability import (
+    merge_metrics,
+    observe_frame,
+    observed_metrics,
+    validation_metric_exprs,
+)
 
 
 def read_track_stream(spark: SparkSession, path: str,
@@ -58,39 +67,62 @@ def read_track_stream(spark: SparkSession, path: str,
 def merge_micro_batch(batch: DataFrame, timeline_path: str,
                       group_cols=("model", "decision_id"),
                       max_records_per_file: int = MAX_RECORDS_PER_FILE,
-                      on_invalid=None) -> None:
-    """The foreachBatch body: parse → validate → project → merge → append.
+                      on_invalid=None) -> dict:
+    """The foreachBatch body: parse → validate → project → merge → append,
+    as ONE Spark action.
 
-    Identical operator chain to batch ingest; merging within the
-    micro-batch window before the append mirrors the reference's
-    within-window merge (src/ingest/ingest_firehose.py:23-25).
+    The same body serves batch ingest (scripts/ingest_job.py); merging
+    within the micro-batch window before the append mirrors the
+    reference's within-window merge (src/ingest/ingest_firehose.py:23-25).
+
+    Every count rides the timeline write as ``observe()`` metrics, so
+    nothing re-reads the batch — except a batch with no valid record,
+    whose counts take one more pass (adaptive execution drops the
+    observed node when the merge shuffle is empty). Returns the batch's
+    record::
+
+        {"rows_read", "valid", "invalid": {reason: count},
+         "rows_written", "rewarded_rows", "reward_mass"}
+
+    ``invalid`` holds only reasons with records; ``rows_written`` and
+    the reward figures describe the appended (merged) rows.
 
     ``on_invalid``: optional callable receiving the batch's invalid-record
     histogram as ``{reason: count}`` — the streaming surface of the
     reference's per-batch exception counting (A9,
-    src/ingest/firehose_record.py:223-232). Only invoked when the batch
-    actually has invalid records (the histogram costs one extra pass
-    over the micro-batch, never over the timeline).
+    src/ingest/firehose_record.py:223-232). It fires after the append
+    commits, and only when the batch has invalid records.
     """
-    import time as _time
-
-    # one wall-clock instant for BOTH the split and the histogram — each
-    # would otherwise evaluate the future-KSUID guard at its own query
-    # time, letting a clock-skewed record be counted invalid yet written
-    now_ts = _time.time()
-    parsed = parse_track_records(batch)
-    valid, _invalid = split_valid(parsed, now_ts=now_ts)
-    if on_invalid is not None:
-        from ..ingest.validate import invalid_record_histogram
-
-        hist = {r["reason"]: r["count"]
-                for r in invalid_record_histogram(parsed, now_ts=now_ts).collect()}
-        if hist:
-            on_invalid(hist)
-    rd = to_rewarded_decisions(valid)
-    merged = merge_rewarded_decisions(rd, group_cols=group_cols)
-    write_timeline(finalize_for_storage(merged), timeline_path,
+    # one wall-clock instant for the whole batch: the future-KSUID guard
+    # must not move between the rows that are counted and those written
+    now_ts = time.time()
+    checked = with_invalid_reason(parse_track_records(batch), now_ts)
+    read_obs, observed = observe_frame(checked, "ingest_validation",
+                                       *validation_metric_exprs())
+    valid = observed.where(F.col(REASON_COL).isNull())
+    merged = merge_rewarded_decisions(to_rewarded_decisions(valid),
+                                      group_cols=group_cols)
+    write_obs, final = merge_metrics(finalize_for_storage(merged), "ingest_write")
+    write_timeline(final, timeline_path,
                    max_records_per_file=max_records_per_file)
+    # The read-side metrics go missing when no valid row reached the
+    # merge shuffle (see observed_metrics); the counts of such a batch,
+    # which wrote nothing, take one more pass. The write-side observe
+    # sits above the shuffle and always reports.
+    read = (observed_metrics(read_obs)
+            or checked.agg(*validation_metric_exprs()).first().asDict())
+    wrote = write_obs.get
+    invalid = {r: read[r] for r in INVALID_REASONS if read[r]}
+    if invalid and on_invalid is not None:
+        on_invalid(invalid)
+    return {
+        "rows_read": read["rows_read"],
+        "valid": read["valid"],
+        "invalid": invalid,
+        "rows_written": wrote["n_rows"],
+        "rewarded_rows": wrote["n_rewarded"],
+        "reward_mass": wrote["reward_sum"],
+    }
 
 
 def start_timeline_stream(spark: SparkSession, source_path: str,
@@ -131,7 +163,6 @@ def _normalize_event_time(df: DataFrame, ts_col: str) -> DataFrame:
     session default) delivers would interpret the value as SECONDS and
     silently compute windows billions of years out — callers must
     convert explicitly (``F.timestamp_micros(ns / 1000)``)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType, TimestampType
 
     dt = df.schema[ts_col].dataType
@@ -158,8 +189,6 @@ def windowed_event_stats(events: DataFrame, ts_col: str = "ts",
     partition. Works on both streaming and batch DataFrames (the batch
     plan ignores the watermark — useful for oracle comparisons).
     """
-    from pyspark.sql import functions as F  # local: keep module header lean
-
     df = _normalize_event_time(events, ts_col)
     if df.isStreaming:
         df = df.withWatermark(ts_col, watermark_delay)
@@ -194,8 +223,6 @@ def session_window_stats(events: DataFrame, ts_col: str = "ts",
     repair (SURVEY §2.11). Works on batch frames too (watermark
     skipped) so the same operator is oracle-checkable.
     """
-    from pyspark.sql import functions as F
-
     df = _normalize_event_time(events, ts_col)
     if df.isStreaming:
         df = df.withWatermark(ts_col, watermark_delay)
