@@ -8,8 +8,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F, Window
-from tracker_trainer_spark.queries import QUERIES, release_caches, _t
 from tracker_trainer_spark.session import get_spark, warm_python_workers
+from tracker_trainer_spark.tables import _t, release_caches
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 

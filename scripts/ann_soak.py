@@ -37,8 +37,8 @@ from tracker_trainer_spark.functions.similarity import (  # noqa: E402
     ivf_index_topk,
     ivfpq_index_topk,
 )
-from tracker_trainer_spark.queries import _t  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
+from tracker_trainer_spark.tables import _t  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BASE = "/tmp/ann_soak"

@@ -39,13 +39,13 @@ from pyspark.sql import functions as F  # noqa: E402
 from tracker_trainer_spark.functions.dedup import (  # noqa: E402
     shingle_hashes_arrow,
 )
-from tracker_trainer_spark.queries import _t  # noqa: E402
 from tracker_trainer_spark.queries_ml_ext import (  # noqa: E402
     _assign_expr,
     _mean_centroids,
     prefix_filter_pairs,
 )
 from tracker_trainer_spark.session import get_spark, spread  # noqa: E402
+from tracker_trainer_spark.tables import _t  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DIM = 64

@@ -12,8 +12,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tracker_trainer_spark.queries import QUERIES, release_caches  # noqa: E402
+from tracker_trainer_spark.queries import QUERIES  # noqa: E402
 from tracker_trainer_spark.session import get_spark, warm_python_workers  # noqa: E402
+from tracker_trainer_spark.tables import release_caches  # noqa: E402
 
 name = sys.argv[1]
 sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") \

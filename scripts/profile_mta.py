@@ -41,9 +41,10 @@ def main() -> None:
                                   "spark.sql.files.maxPartitionBytes": "4194304"})
     warm_python_workers(spark)
     from tracker_trainer_spark.functions.range_join import interval_join
-    from tracker_trainer_spark.queries import QUERIES, _t
+    from tracker_trainer_spark.queries import QUERIES
     from tracker_trainer_spark.queries_attrib_ext import (
         MTA_LINEAR_CREDIT_SQL, MTA_POSITION_CREDIT_SQL, _MTA_WINDOW_DAYS)
+    from tracker_trainer_spark.tables import _t
 
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ev = _t(spark, sf_dir, "events")

@@ -22,8 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tracker_trainer_spark.queries import QUERIES, _t  # noqa: E402
+from tracker_trainer_spark.queries import QUERIES  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
+from tracker_trainer_spark.tables import _t  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WORK = "/tmp/scale_stress"

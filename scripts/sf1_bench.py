@@ -35,8 +35,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tracker_trainer_spark.queries import ORACLES, QUERIES, release_caches  # noqa: E402
+from tracker_trainer_spark.queries import ORACLES, QUERIES  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
+from tracker_trainer_spark.tables import release_caches  # noqa: E402
 
 SCALED_TABLES = {"region", "nation", "customer", "supplier", "part",
                  "orders", "lineitem", "events", "documents", "embeddings"}

@@ -1,7 +1,7 @@
 """Unit surface of functions/basket.py — the mask-histogram mining
 primitives that back basket_pair_lift / frequent_brand_triples.
 
-The registry queries certify end-to-end parity; these tests pin the
+The registry queries check end-to-end parity; these tests pin the
 primitives' CONTRACTS so a future caller can't misuse them silently:
 histogram counts re-associate exactly, bit decoding is ascending,
 packed combination order equals tuple order, and the dictionary memo

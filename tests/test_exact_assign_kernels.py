@@ -27,7 +27,7 @@ SF_DIR = "/root/testdata/sf0.01"
 @pytest.fixture(scope="module")
 def emb(spark):
     from tracker_trainer_spark.queries_ml_ext import _emb_double
-    from tracker_trainer_spark.queries import _t
+    from tracker_trainer_spark.tables import _t
 
     return _emb_double(_t(spark, SF_DIR, "embeddings"))
 

@@ -1,5 +1,5 @@
 """Algorithm invariants for the r4 query families — properties the
-DuckDB oracle CANNOT certify (it runs the same spelling, so a shared
+DuckDB oracle CANNOT check (it runs the same spelling, so a shared
 algorithmic mistake would pass parity): credit conservation, leakage
 freedom, recurrence fidelity against an independent reference, and
 eigenvector recovery against numpy."""
@@ -15,7 +15,7 @@ def test_mta_credits_conserve_per_purchase(spark, sf_dir):
     defining property of an attribution model; parity can't see a
     model that consistently leaks mass on both engines)."""
     from tracker_trainer_spark.functions.range_join import interval_join
-    from tracker_trainer_spark.queries import _t
+    from tracker_trainer_spark.tables import _t
     from tracker_trainer_spark.queries_attrib_ext import (
         _MTA_WINDOW_DAYS,
         MTA_LINEAR_CREDIT_SQL,
@@ -63,7 +63,7 @@ def test_pit_join_is_leakage_free(spark, sf_dir):
     own timestamp — the defining rule of point-in-time correctness.
     Re-derive each matched snapshot's publish time from its contents
     and assert publish_ts <= purchase_ts row by row."""
-    from tracker_trainer_spark.queries import _t
+    from tracker_trainer_spark.tables import _t
     from tracker_trainer_spark.queries_feature_ext import feature_pit_join
 
     out = feature_pit_join(spark, sf_dir)
@@ -139,7 +139,7 @@ def test_top_pc_recovers_planted_component(spark, tmp_path):
     """Three power-iteration rounds must recover a PLANTED dominant
     direction (spike + small isotropic noise → large spectral gap →
     fast convergence) within cosine 0.99 of numpy's exact leading
-    eigenvector of the same quantized covariance — certifying the
+    eigenvector of the same quantized covariance — proving the
     algorithm converges, which parity alone cannot (both engines could
     agree on a wrong iteration). The real sf corpora are deliberately
     near-isotropic (see embedding_isotropy), where ANY direction is
@@ -180,7 +180,7 @@ def test_top_pc_recovers_planted_component(spark, tmp_path):
 
 def test_mwu_rank_sum_identity(spark, sf_dir):
     """U_a + U_b = n_a·n_b exactly — the defining identity of the
-    Mann-Whitney statistic. Parity can't certify it (both engines run
+    Mann-Whitney statistic. Parity can't check it (both engines run
     the same rank spelling); the identity catches a rank-table or
     midrank mistake that is consistent across engines."""
     from tracker_trainer_spark.functions.sampling import hash_bucket
@@ -261,7 +261,7 @@ def test_zone_map_audit_internal_consistency(spark, sf_dir):
     """Pruned partitions never exceed the partition count, matching
     rows never exceed scanned rows, and a predicate that prunes
     NOTHING must scan every row the fact table has."""
-    from tracker_trainer_spark.queries import _t
+    from tracker_trainer_spark.tables import _t
     from tracker_trainer_spark.queries_attrib_ext import (
         zone_map_pruning_audit)
 

@@ -363,7 +363,7 @@ def test_interval_join_num_partitions_same_results(spark):
 def test_table_row_count_matches_spark(spark, sf_dir):
     """Parquet-footer counts must equal a real Spark count for every
     input table (and be stable through the memo)."""
-    from tracker_trainer_spark.queries import _ROW_COUNT_CACHE, table_row_count
+    from tracker_trainer_spark.tables import _ROW_COUNT_CACHE, table_row_count
 
     for t in ("lineitem", "supplier", "events"):
         want = spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
@@ -377,9 +377,7 @@ def test_table_column_max_matches_spark(spark, sf_dir):
     they gate the copurchase pair pack (queries_recs_ext)."""
     from pyspark.sql import functions as F
 
-    from tracker_trainer_spark.queries import table_column_max
-
-    from tracker_trainer_spark.queries import table_column_min
+    from tracker_trainer_spark.tables import table_column_max, table_column_min
 
     for t, c in (("lineitem", "l_partkey"), ("orders", "o_orderkey")):
         want = (spark.read.parquet(f"{sf_dir}/{t}.parquet")
@@ -396,7 +394,7 @@ def test_table_column_stats_none_for_inexact_types(sf_dir):
     the exactness contract (ADVICE r7) demands None for them, so a
     caller gating pack safety on a string column takes the
     conservative path instead of trusting a possibly-inexact value."""
-    from tracker_trainer_spark.queries import (
+    from tracker_trainer_spark.tables import (
         table_column_max, table_column_min)
 
     assert table_column_max(sf_dir, "part", "p_brand") is None

@@ -16,6 +16,7 @@ Layout:
   functions/     text analysis, dedup, similarity search, multimodal
   streaming/     Structured Streaming ingest (foreachBatch merge)
   queries        the oracle-checked query registry used by __spark_entry__
+  tables         table loader, rounding and memos shared by the registry
 """
 
 __version__ = "0.1.0"

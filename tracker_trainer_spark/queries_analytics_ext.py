@@ -8,8 +8,7 @@ pipeline surface.
 Each covers a DataFrame operator family the base registry does not
 exercise, as an oracle-checked query per the repo convention (identical
 column aliases on both sides, floats rounded to 4 decimals,
-deterministic tiebreakers under every top-k) — except the declared
-binary-media entry, which the driver checks rows-only.
+deterministic tiebreakers under every top-k).
 
 Scale posture (100 TB):
 - pivot with a PINNED value list compiles to one hash agg of
@@ -35,20 +34,15 @@ from pyspark.sql.window import Window
 
 from tracker_trainer_spark.functions.ranking import (
     cached_boundaries,
-    with_cumsum,
     with_ntile,
     with_prefix_max,
 )
-
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.session import spread as _spread
+from tracker_trainer_spark.tables import (
+    _t,
+    r4,
+    tracked_persist,
+)
 
 
 # --------------------------------------------------------------------------
@@ -256,8 +250,6 @@ def doc_tfidf_top_terms(spark, sf_dir, k: int = 3, min_len: int = 4):
         )
         .where(F.length("term") >= min_len)
     )
-    from tracker_trainer_spark.queries import tracked_persist
-
     # two consumers (df agg + join probe): measured, AQE does NOT reuse
     # the tf exchange across them (3.47 s with the subtree recomputed vs
     # 1.15 s persisted) — same defect class as part_affinity_recs' n_part
@@ -1266,8 +1258,6 @@ def doc_bigram_pmi(spark, sf_dir, k: int = 20, min_pairs: int = 5):
             )
         ).alias("p")
     ).select("p.w1", "p.w2")
-    from tracker_trainer_spark.queries import tracked_persist
-
     # domain-bounded (distinct unigrams + distinct bigrams ≪ token
     # stream); persisted because its two slices below are separate
     # consumers and AQE does not reuse the agg exchange across them —
@@ -2052,8 +2042,6 @@ def doc_pii_scan(spark, sf_dir):
     parallelizing-repartition convention applies (no-op at real scale).
     sf1 best-of-3: 1.78 s → 0.51 s (remaining gap vs the 0.14 s oracle
     is the spread exchange + job floor on a 60-row result)."""
-    from tracker_trainer_spark.session import spread as _spread
-
     docs = _spread(_t(spark, sf_dir, "documents").select("source", "text"))
     aggs = []
     for name, pat in _PII_PATTERNS.items():
@@ -2324,18 +2312,7 @@ FROM iv ORDER BY user_id, version
 """
 
 
-# Registered via the DEFERRED channel in queries.py: these append AFTER
-# the driver-window reorder, so they cannot displace an older
-# not-yet-verified query from the verification window.  Empty right now
-# (r4's certified-set refresh opened window slots, so value_drift_ks was
-# promoted into the main registry); use it again for any mid-round
-# addition once the 50-query window refills.
-ANALYTICS_DEFERRED_QUERIES = {}
-
-ANALYTICS_DEFERRED_ORACLES = {}
-
-
-ANALYTICS_QUERIES = {
+QUERIES = {
     "doc_bigram_pmi": doc_bigram_pmi,
     "doc_zipf_fit": doc_zipf_fit,
     "part_name_editdist_pairs": part_name_editdist_pairs,
@@ -2369,11 +2346,10 @@ ANALYTICS_QUERIES = {
     "feature_robust_scaling": feature_robust_scaling,
     "score_calibration_curve": score_calibration_curve,
     "user_tier_scd2": user_tier_scd2,
-    # rows-only by design (binary media): no oracle entry
     "media_image_features": media_image_features,
 }
 
-ANALYTICS_ORACLES = {
+ORACLES = {
     "doc_bigram_pmi": BIGRAM_PMI_SQL,
     "doc_zipf_fit": ZIPF_SQL,
     "part_name_editdist_pairs": EDITDIST_SQL,
@@ -2397,9 +2373,8 @@ ANALYTICS_ORACLES = {
     "sliding_event_counts": SLIDING_COUNTS_SQL,
     "value_drift_ks": VALUE_KS_SQL,
     "oof_target_encoding": OOF_TARGET_SQL,
-    # r7: the portable stub decode made the multimodal plumbing
-    # value-verifiable — no parquet input, the oracle regenerates the
-    # synthetic pixels in SQL
+    # no parquet input: the oracle regenerates the synthetic pixels of
+    # the portable stub decode in SQL
     "media_image_features": MEDIA_FEATURES_SQL,
     "fk_integrity_audit": FK_AUDIT_SQL,
     "conversion_latency_quantiles": CONVERSION_LATENCY_SQL,

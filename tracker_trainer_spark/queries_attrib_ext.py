@@ -1,4 +1,4 @@
-"""Marketing attribution / engine-operations queries (deferred channel).
+"""Marketing attribution / engine-operations registry queries.
 
 - ``multitouch_attribution`` — multi-touch credit assignment: every
   purchase distributes credit over the same user's touchpoints in the
@@ -22,15 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import _t, r4
 
 
 # --------------------------------------------------------------------------
@@ -450,14 +442,14 @@ ORDER BY day
 """
 
 
-ATTRIB_DEFERRED_QUERIES = {
+QUERIES = {
     "multitouch_attribution": multitouch_attribution,
     "key_skew_audit": key_skew_audit,
     "zone_map_pruning_audit": zone_map_pruning_audit,
     "partition_freshness_audit": partition_freshness_audit,
 }
 
-ATTRIB_DEFERRED_ORACLES = {
+ORACLES = {
     "multitouch_attribution": MTA_SQL,
     "key_skew_audit": _skew_sql(),
     "zone_map_pruning_audit": _zone_sql(),

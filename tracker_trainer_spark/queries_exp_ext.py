@@ -1,4 +1,4 @@
-"""Experimentation / forecast-evaluation queries (deferred channel).
+"""Experimentation / forecast-evaluation registry queries.
 
 - ``ab_test_lift`` — the experimentation-platform readout: users split
   into two variants by the repo's engine-portable md5 hash bucket
@@ -24,15 +24,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import _t, r4
 
 
 # --------------------------------------------------------------------------
@@ -348,13 +340,13 @@ FROM z
 """
 
 
-EXP_DEFERRED_QUERIES = {
+QUERIES = {
     "ab_test_lift": ab_test_lift,
     "holt_backtest": holt_backtest,
     "mann_whitney_u": mann_whitney_u,
 }
 
-EXP_DEFERRED_ORACLES = {
+ORACLES = {
     "ab_test_lift": AB_SQL,
     "holt_backtest": _backtest_sql(),
     "mann_whitney_u": MWU_SQL,

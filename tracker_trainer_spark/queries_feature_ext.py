@@ -1,6 +1,6 @@
-"""Feature-store / data-quality query families (deferred channel).
+"""Feature-store / data-quality registry queries.
 
-Four operator classes the registry did not yet certify:
+Four operator classes:
 
 - ``feature_pit_join`` — point-in-time-correct MULTI-TABLE feature
   join, the feature-store serving/training primitive (each feature
@@ -18,8 +18,8 @@ Four operator classes the registry did not yet certify:
   a quasi-identifier tuple (how many rows sit in equivalence classes
   smaller than k, for the standard k ladder), the pre-release check on
   any training extract containing user attributes.
-- ``stream_session_stats`` — the THIRD driver-visible streaming
-  certification: gap-based ``session_window`` aggregation drained
+- ``stream_session_stats`` — the third oracle-checked streaming
+  state path: gap-based ``session_window`` aggregation drained
   through the real micro-batch engine (state-merging session path —
   distinct from the tumbling-window state of ``stream_windowed_counts``
   and the dedup state of ``stream_distinct_users``), required to equal
@@ -36,25 +36,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tracker_trainer_spark.functions.ranking import (
-    with_cumsum,
-    with_ntile,
-    with_prefix_max,
-)
-
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
-
-
-from tracker_trainer_spark.queries_stats_ext import (  # noqa: E402
+from tracker_trainer_spark.functions.ranking import with_ntile
+from tracker_trainer_spark.queries_stats_ext import (
     DAILY_PURCHASE_CENTS_SQL as _DAILY_CENTS_SQL,
+)
+from tracker_trainer_spark.tables import (
+    _t,
+    normalize_ns_ts,
+    r4,
 )
 
 
@@ -364,8 +353,6 @@ def stream_session_stats(spark, sf_dir):
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    from tracker_trainer_spark.queries import normalize_ns_ts
-
     src = normalize_ns_ts(src)  # nanos-as-long edge: SAME path as _t
     agg = session_window_stats(src.select("user_id", "ts", "value"))
     name = f"stream_sess_{uuid.uuid4().hex[:8]}"
@@ -539,7 +526,7 @@ ORDER BY lang
 """
 
 
-FEATURE_DEFERRED_QUERIES = {
+QUERIES = {
     "feature_pit_join": feature_pit_join,
     "weekday_seasonality": weekday_seasonality,
     "k_anonymity_audit": k_anonymity_audit,
@@ -548,7 +535,7 @@ FEATURE_DEFERRED_QUERIES = {
     "corpus_mixture_weights": corpus_mixture_weights,
 }
 
-FEATURE_DEFERRED_ORACLES = {
+ORACLES = {
     "feature_pit_join": PIT_SQL,
     "weekday_seasonality": SEASONALITY_SQL,
     "k_anonymity_audit": KANON_SQL,

@@ -1,4 +1,4 @@
-"""Iterative linear algebra / CEP pattern queries (deferred channel).
+"""Iterative linear algebra / CEP pattern registry queries.
 
 - ``embedding_top_pc`` — the leading principal component of the
   embedding corpus by IN-ENGINE power iteration: center, build the
@@ -20,15 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import _t, trained_artifact
 
 
 # --------------------------------------------------------------------------
@@ -145,7 +137,6 @@ def embedding_top_pc(spark, sf_dir):
     # covariance is deterministic over the immutable corpus and
     # round-6-quantized, so repeat constructions skip the Gram pass;
     # VERDICT r8 item 5 "memoize")
-    from tracker_trainer_spark.queries import trained_artifact
     cov = trained_artifact(
         spark, ("pc_cov", sf_dir),
         lambda c=cov: c.localCheckpoint(eager=True))
@@ -275,12 +266,12 @@ ORDER BY user_id
 """
 
 
-LINALG_DEFERRED_QUERIES = {
+QUERIES = {
     "embedding_top_pc": embedding_top_pc,
     "event_pattern_match": event_pattern_match,
 }
 
-LINALG_DEFERRED_ORACLES = {
+ORACLES = {
     "embedding_top_pc": _pc_sql(),
     "event_pattern_match": PATTERN_SQL,
 }

@@ -40,22 +40,17 @@ from tracker_trainer_spark.functions.ranking import (
     cached_boundaries,
     with_cumsum,
     with_ntile,
-    with_prefix_max,
 )
-
 from tracker_trainer_spark.functions.similarity import (
     _lit_vec as _sim_lit_vec,
 )
-
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.session import spread as _spread
+from tracker_trainer_spark.tables import (
+    _t,
+    r4,
+    tracked_persist,
+    trained_artifact,
+)
 
 
 # --------------------------------------------------------------------------
@@ -191,7 +186,6 @@ def kmeans_embedding_clusters(spark, sf_dir, k: int = KMEANS_K,
             cents = _mean_centroids(assigned, prev=cents)
         return cents
 
-    from tracker_trainer_spark.queries import trained_artifact
     centroids = trained_artifact(
         spark, ("kmeans", sf_dir, k, iters), _train)
     if not centroids:  # empty corpus: empty result, same schema
@@ -376,7 +370,6 @@ def jaccard_prefix_join(spark, sf_dir, t: float = JACCARD_T,
     shingles only (small df by construction); verify re-joins candidate
     ids to shingle sets. No all-pairs stage exists."""
     from tracker_trainer_spark.functions.dedup import shingle_hashes_arrow
-    from tracker_trainer_spark.session import spread as _spread
 
     # _spread: a byte-small local scan otherwise collapses the whole
     # verify pipeline onto one task via AQE coalescing (at real scale
@@ -862,8 +855,6 @@ def basket_pair_lift(spark, sf_dir, min_support: int = BASKET_MIN_SUPPORT,
     # at sf1) — a safe persist at any fact scale; tracked_persist
     # (ADVICE r8) lets harnesses release it between queries.  n_orders
     # rides as a broadcast 1-row relation instead of a collected scalar.
-    from tracker_trainer_spark.queries import tracked_persist
-
     mhist = tracked_persist(mask_histogram(indexed, "l_orderkey", "bi",
                                            domain_size=len(brands)))
     # NO fanout before the C(b,2) explode: A/B'd at sf0.1 AND sf1
@@ -1052,7 +1043,6 @@ def corpus_decontamination(spark, sf_dir):
     from tracker_trainer_spark.functions.dedup import shingle_hashes_arrow
     from tracker_trainer_spark.functions.text import tokens
     from tracker_trainer_spark.functions import sampling as _sampling
-    from tracker_trainer_spark.session import spread as _spread
 
     # r10 (§4.2): the interpreted shingle HOF (transform+md5+conv walk
     # the expression tree per shingle) was this query's cold wall — the
@@ -1332,8 +1322,6 @@ def weighted_median_price(spark, sf_dir):
     real scale.  The persist is distinct-price-sized (≤ fact;
     MEMORY_AND_DISK spills to where the shuffle files would have
     lived) and released by the harness via release_caches()."""
-    from tracker_trainer_spark.queries import tracked_persist
-
     li = _t(spark, sf_dir, "lineitem")
     hist = tracked_persist(
         li.groupBy("l_returnflag", "l_extendedprice")
@@ -1478,8 +1466,6 @@ def degree_oriented_triangles(edges):
     edge/vertex counts collapse into ONE agg over it: Σdegree = 2·|E|
     exactly (integers), so the former separate edge-count pass is free.
     """
-    from tracker_trainer_spark.queries import tracked_persist
-
     edges = tracked_persist(edges)
     deg = tracked_persist(
         edges.select(F.col("a").alias("v"))
@@ -1574,7 +1560,6 @@ def ann_pq_topk(spark, sf_dir, probe_vec_id: int = 0, k: int = 10):
     # trained_artifact — repeat constructions reuse the identical
     # m×k×(dim/m) floats instead of re-scheduling the training collects
     # (VERDICT r8 item 5 "memoize"; session-local persistent-index analog)
-    from tracker_trainer_spark.queries import trained_artifact
     books, probe = trained_artifact(
         spark, ("pq", sf_dir, PQ_M, PQ_K, PQ_ITERS, probe_vec_id),
         lambda: _sim.lloyd_pq_codebooks(
@@ -1806,7 +1791,6 @@ def ann_ivfpq_topk(spark, sf_dir, probe_vec_id: int = 0, k: int = 10,
     # r9: the fused deterministic training result memoizes per session
     # (trained_artifact — VERDICT r8 item 5 "memoize"; a fresh session
     # retrains, the session-local analog of build_ivfpq_index)
-    from tracker_trainer_spark.queries import trained_artifact
     cents, books, probe = trained_artifact(
         spark, ("ivfpq", sf_dir, n_cells, PQ_M, PQ_K, PQ_ITERS,
                 probe_vec_id),
@@ -2056,8 +2040,6 @@ def customer_rfm_segments(spark, sf_dir):
     kind. The monetary cut orders by the ROUNDED sum: FP totals differ
     across engines in the last ulp, and an unrounded boundary pair
     would flip quartiles."""
-    from tracker_trainer_spark.queries import tracked_persist
-
     orders = _t(spark, sf_dir, "orders")
     # the per-customer agg feeds the corpus-max scalar, the melt's
     # boundary sample, the ranked melt AND the final join — four
@@ -2316,8 +2298,6 @@ def propensity_training_weights(spark, sf_dir, topk: int = 50):
         ztp_from_uniform,
     )
 
-    from tracker_trainer_spark.session import spread as _spread
-
     ev = _t(spark, sf_dir, "events").where(F.col("event_type") != "purchase")
     k = F.get_json_object("props", "$.k").cast("long")
     # byte-small events file = few input splits: spread the RAW rows
@@ -2483,8 +2463,6 @@ def decision_training_rows(spark, sf_dir, topk: int = 100):
     consumers of the same subtree — unpersisted, the events scan + JSON
     parse + md5 explore gate ran twice (the spearman/part_affinity
     lesson; measured 1.34 s → see docstring A/B below)."""
-    from tracker_trainer_spark.queries import tracked_persist
-    from tracker_trainer_spark.session import spread as _spread
     from tracker_trainer_spark.trainer.weights import (
         CLIP_MIN_PROPENSITY,
         CONTEXT_DROPOUT_KEEP,
@@ -3020,7 +2998,7 @@ SELECT (SELECT count(*) FROM sel) AS n_decisions,
 """
 
 
-ML_QUERIES = {
+QUERIES = {
     "decision_training_rows": decision_training_rows,
     "duplicate_cluster_histogram": duplicate_cluster_histogram,
     "propensity_training_weights": propensity_training_weights,
@@ -3046,9 +3024,6 @@ ML_QUERIES = {
     "weighted_median_price": weighted_median_price,
     "price_quantity_regression": price_quantity_regression,
     "supplier_triangle_count": supplier_triangle_count,
-    # appended LAST on purpose: the driver certifies the first 50
-    # queries()' entries per round; these three wait for the next
-    # window rather than pushing an older uncertified query out of it
     "lineitem_benford_deviation": lineitem_benford_deviation,
     "user_event_entropy": user_event_entropy,
     "customer_rfm_segments": customer_rfm_segments,
@@ -3056,7 +3031,7 @@ ML_QUERIES = {
     "order_priority_chi2": order_priority_chi2,
 }
 
-ML_ORACLES = {
+ORACLES = {
     "decision_training_rows": DECISION_ROWS_SQL,
     "duplicate_cluster_histogram": DUP_HISTOGRAM_SQL,
     "propensity_training_weights": PROPENSITY_WEIGHTS_SQL,

@@ -1,4 +1,4 @@
-"""Recommender / growth-analytics queries (deferred channel).
+"""Recommender / growth-analytics registry queries.
 
 - ``part_affinity_recs`` — item-item collaborative filtering: top
   recommendations per seed part by co-purchase cosine
@@ -23,15 +23,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import (
+    _t,
+    r4,
+    table_column_max,
+    table_column_min,
+    tracked_persist,
+)
 
 
 # --------------------------------------------------------------------------
@@ -151,8 +149,6 @@ def part_affinity_recs(spark, sf_dir):
     Persisting the part-keyed degree relation (part-table-sized,
     bounded) computes it once; sf1 full-query min-of-4 1.97 s → 1.31 s.
     """
-    from tracker_trainer_spark.queries import table_column_max, tracked_persist
-
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     ob = tracked_persist(
         li.repartition("l_orderkey")
@@ -165,8 +161,6 @@ def part_affinity_recs(spark, sf_dir):
     # NEGATIVE partkey's sign bits would bleed into the high word while
     # a max-only gate passes — TPC-H keys are positive, but the guard
     # exists precisely for non-TPC-H inputs).
-    from tracker_trainer_spark.queries import table_column_min
-
     max_pk = table_column_max(sf_dir, "lineitem", "l_partkey")
     min_pk = table_column_min(sf_dir, "lineitem", "l_partkey")
     half = copurchase_pairs(
@@ -324,12 +318,12 @@ ORDER BY c.cohort, c.age_weeks
 """
 
 
-RECS_DEFERRED_QUERIES = {
+QUERIES = {
     "part_affinity_recs": part_affinity_recs,
     "cohort_ltv_curve": cohort_ltv_curve,
 }
 
-RECS_DEFERRED_ORACLES = {
+ORACLES = {
     "part_affinity_recs": RECS_SQL,
     "cohort_ltv_curve": LTV_SQL,
 }

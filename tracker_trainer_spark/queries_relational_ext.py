@@ -22,15 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import _t, r4
 
 
 # --------------------------------------------------------------------------
@@ -439,7 +431,7 @@ ORDER BY s_name
 """
 
 
-EXT_QUERIES = {
+QUERIES = {
     "q2_min_cost_supplier": q2_min_cost_supplier,
     "q8_market_share": q8_market_share,
     "q9_product_profit": q9_product_profit,
@@ -448,7 +440,7 @@ EXT_QUERIES = {
     "q20_promotion_suppliers": q20_promotion_suppliers,
 }
 
-EXT_ORACLES = {
+ORACLES = {
     "q2_min_cost_supplier": Q2_SQL,
     "q8_market_share": Q8_SQL,
     "q9_product_profit": Q9_SQL,

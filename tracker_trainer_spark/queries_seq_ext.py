@@ -1,7 +1,6 @@
-"""Forecasting / CDC / weighted-traversal / LM-scoring queries
-(deferred channel).
+"""Forecasting / CDC / weighted-traversal / LM-scoring registry queries.
 
-Four more operator classes for the registry:
+Four operator classes:
 
 - ``holt_linear_forecast`` — Holt's double exponential smoothing
   (level + trend state) over the daily revenue series with 1-step and
@@ -38,20 +37,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-from tracker_trainer_spark.queries_stats_ext import (  # noqa: E402
+from tracker_trainer_spark.queries_stats_ext import (
     DAILY_PURCHASE_CENTS_SQL as _DAILY_CENTS_SQL,
 )
-
-
-def r4(c):
-    return F.round(c, 4)
+from tracker_trainer_spark.tables import _t, r4
 
 
 # --------------------------------------------------------------------------
@@ -547,7 +536,7 @@ ORDER BY doc_id
 """
 
 
-SEQ_DEFERRED_QUERIES = {
+QUERIES = {
     "holt_linear_forecast": holt_linear_forecast,
     "user_state_cdc_merge": user_state_cdc_merge,
     "supplier_cheapest_paths": supplier_cheapest_paths,
@@ -555,7 +544,7 @@ SEQ_DEFERRED_QUERIES = {
     "tokenizer_oov_rate": tokenizer_oov_rate,
 }
 
-SEQ_DEFERRED_ORACLES = {
+ORACLES = {
     "holt_linear_forecast": HOLT_SQL,
     "user_state_cdc_merge": CDC_SQL,
     "supplier_cheapest_paths": _sssp_sql(),

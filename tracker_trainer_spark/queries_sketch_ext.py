@@ -1,5 +1,5 @@
 """Sketch / probabilistic-structure queries plus the operator families
-they certify: HyperLogLog distinct-count, Count-Min frequency, Bloom
+they check: HyperLogLog distinct-count, Count-Min frequency, Bloom
 membership, recursive-CTE hierarchy rollup, running-distinct windows,
 Theil-Sen robust regression, bipartite co-occurrence projection, and a
 second streaming-engine certification (stateful dedup).
@@ -38,26 +38,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tracker_trainer_spark.functions.ranking import (
-    with_cumsum,
-    with_ntile,
-    with_prefix_max,
+from tracker_trainer_spark.functions.ranking import with_ntile
+from tracker_trainer_spark.session import spread as _spread
+from tracker_trainer_spark.tables import (
+    _t,
+    table_column_max,
+    table_column_min,
+    table_row_count,
+    tracked_persist,
 )
-
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def _spread(df, n=None):
-    """session.spread: repartition a byte-small single-split scan across
-    cores (no-op when input splits already parallelize it — see its
-    contract; call on scan + narrow plans only)."""
-    from tracker_trainer_spark.session import spread
-
-    return spread(df, n)
 
 
 def _hash28(col):
@@ -809,7 +798,6 @@ def theil_sen_price_slope(spark, sf_dir):
     # per consumer in the static plan (measured: +6 exchanges), while
     # the literal folds into the filter. The oracle computes the
     # identical integer inline.
-    from tracker_trainer_spark.queries import table_row_count, tracked_persist
     n_rows = table_row_count(sf_dir, "lineitem")
     mod = max(600, n_rows // 1000)
     # r9: the sample feeds THREE subtrees (both pair sides + the point
@@ -949,8 +937,6 @@ def supplier_shared_parts(spark, sf_dir):
     # has no unpacked fallback, so "can't prove the pack safe" must
     # raise, not run unguarded), and the min bound is checked because
     # a negative suppkey's sign bits would bleed into the high word.
-    from tracker_trainer_spark.queries import table_column_max, table_column_min
-
     _max_sk = table_column_max(sf_dir, "lineitem", "l_suppkey")
     _min_sk = table_column_min(sf_dir, "lineitem", "l_suppkey")
     if (_max_sk is None or int(_max_sk) >= 2 ** 31
@@ -972,8 +958,6 @@ def supplier_shared_parts(spark, sf_dir):
     # on the same loaded box).  tracked_persist (ADVICE r8): harnesses
     # release it between queries; otherwise LRU block eviction is the
     # documented release mechanism.
-    from tracker_trainer_spark.queries import tracked_persist
-
     kept = tracked_persist(
         edges.withColumn("_deg", F.count(F.lit(1)).over(wdeg))
         .where((F.col("_deg") >= 2) & (F.col("_deg") <= 40))
@@ -1804,7 +1788,7 @@ FROM exact, est, nt
 """
 
 
-SKETCH_QUERIES = {
+QUERIES = {
     "merged_quantile_audit": merged_quantile_audit,
     "stream_reward_join": stream_reward_join,
     "hll_distinct_users": hll_distinct_users,
@@ -1824,7 +1808,7 @@ SKETCH_QUERIES = {
     "km_conversion_survival": km_conversion_survival,
 }
 
-SKETCH_ORACLES = {
+ORACLES = {
     "merged_quantile_audit": MERGED_QUANTILE_SQL,
     "stream_reward_join": STREAM_REWARD_JOIN_SQL,
     "hll_distinct_users": HLL_SQL,

@@ -1,7 +1,6 @@
-"""Sequential-statistics and graph-traversal queries (deferred channel).
+"""Sequential-statistics and graph-traversal registry queries.
 
-Families added here, each a distinct operator class the registry did not
-yet certify:
+Each family here is a distinct operator class:
 
 - EWMA smoothing (``daily_value_ewma``): the exponential recurrence
   ewma_t = α·x_t + (1−α)·ewma_{t−1} as an ORDERED left fold — the same
@@ -49,16 +48,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark, sf_dir, name):
-    from tracker_trainer_spark.queries import _t as _load
-
-    return _load(spark, sf_dir, name)
-
-
-def r4(c):
-    return F.round(c, 4)
-
+from tracker_trainer_spark.tables import (
+    _t,
+    r4,
+    table_row_count,
+    tracked_persist,
+    trained_artifact,
+)
 
 
 def daily_purchase_cents(spark, sf_dir):
@@ -637,7 +633,6 @@ def _bfs_sparsified_weighted_edges(spark, sf_dir):
     # metadata (same class as centroid collects).  (w desc, s1, s2) is
     # a total order over pairs, so the kept set is deterministic and
     # identical to the oracle's row_number spelling.
-    from tracker_trainer_spark.queries import table_row_count
     top_m = _BFS_EDGES_PER_NODE * table_row_count(sf_dir, "supplier")
     kept = (
         weights.orderBy(F.desc("w"), "s1", "s2")
@@ -662,8 +657,6 @@ def _checkpointed_cosupply_edges(spark, sf_dir):
     deterministic over the immutable input (TakeOrdered under a total
     order), so the second traversal in a session reuses the first's
     checkpoint — the embedding_top_pc covariance-memo convention."""
-    from tracker_trainer_spark.queries import trained_artifact
-
     return trained_artifact(
         spark, ("cosupply_edges", sf_dir),
         lambda: _bfs_sparsified_weighted_edges(spark, sf_dir)
@@ -773,11 +766,8 @@ def spearman_price_corr(spark, sf_dir):
     # moment join), and a crossJoin'd 1-row aggregate re-expands per
     # consumer in the static plan (measured: +3 exchanges), while the
     # literal folds into the filter.
-    from tracker_trainer_spark.queries import table_row_count
     n_rows = table_row_count(sf_dir, "lineitem")
     mod = max(60, n_rows // 10000)
-    from tracker_trainer_spark.queries import tracked_persist
-
     # the sample feeds THREE subtrees (two rank ECDFs + the moment
     # join); unpersisted, each one re-ran the full fact scan and its
     # per-row md5 sample filter — 3× the kernel CPU for a ~10k-row
@@ -863,7 +853,7 @@ FROM m
 """
 
 
-STATS_DEFERRED_QUERIES = {
+QUERIES = {
     "daily_value_ewma": daily_value_ewma,
     "revenue_cusum_shift": revenue_cusum_shift,
     "variant_ucb_ranking": variant_ucb_ranking,
@@ -873,7 +863,7 @@ STATS_DEFERRED_QUERIES = {
     "spearman_price_corr": spearman_price_corr,
 }
 
-STATS_DEFERRED_ORACLES = {
+ORACLES = {
     "daily_value_ewma": EWMA_SQL,
     "revenue_cusum_shift": CUSUM_SQL,
     "variant_ucb_ranking": UCB_SQL,

@@ -36,7 +36,7 @@ DEFAULT_CONF = {
     "spark.sql.files.maxPartitionBytes": os.environ.get(
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"),
     # testdata events.parquet carries TIMESTAMP(NANOS); read as long and
-    # normalize to microseconds at the scan (see queries._t)
+    # normalize to microseconds at the scan (see tables._t)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
