@@ -146,6 +146,26 @@ def test_xgboost_scoring_branch_logic(spark):
         importlib.reload(train_mod)
 
 
+def test_model_input_follows_backend(spark, monkeypatch):
+    """One conversion picks the model input by backend at call time:
+    NULL → NaN in the array for XGBoost, NULL/NaN → 0.0 in an ml Vector
+    for the fallback. Fits, propensity scoring, score_items and the
+    registry's train_e2e_metrics all convert through it."""
+    import tracker_trainer_spark.trainer.train as train_mod
+
+    enc = spark.createDataFrame(
+        [([1.0, None, float("nan")],)], "features array<double>")
+
+    monkeypatch.setattr(train_mod, "HAS_XGBOOST", True)
+    feats = train_mod.model_input(enc).first()["features"]
+    assert isinstance(feats, list)
+    assert feats[0] == 1.0 and feats[1] != feats[1] and feats[2] != feats[2]
+
+    monkeypatch.setattr(train_mod, "HAS_XGBOOST", False)
+    vec = train_mod.model_input(enc).first()["features"]
+    assert list(vec.toArray()) == [1.0, 0.0, 0.0]
+
+
 class _FakeBooster:
     def __init__(self, names):
         self.feature_names = list(names)

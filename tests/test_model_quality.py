@@ -18,9 +18,7 @@ from tracker_trainer_spark.ingest import (
     write_timeline,
 )
 from tracker_trainer_spark.ingest.reader import read_track_lines
-from tracker_trainer_spark.ksuid import ksuid_timestamp
-from tracker_trainer_spark.trainer.encode import TIMESTAMP_KEY, encode_to_vectors
-from tracker_trainer_spark.trainer.flatten import flatten_col
+from tracker_trainer_spark.trainer.scoring import score_items
 from tracker_trainer_spark.trainer.train import train_two_phase
 
 TS = 1650000000
@@ -68,22 +66,7 @@ def test_decision_model_learns_planted_signal(spark, signal_timeline):
     ).withColumn("context", F.lit('{"hour":12}')).withColumn(
         "decision_id", F.lit(ksuid.deterministic_ksuid(TS + 99999, "probe"))
     )
-    flat = (
-        candidates.withColumn("_i", flatten_col("item", "item"))
-        .withColumn("_c", flatten_col("context", "context"))
-        .withColumn(TIMESTAMP_KEY, ksuid_timestamp(F.col("decision_id")).cast("double"))
-        .select(
-            "song", TIMESTAMP_KEY,
-            F.map_concat(F.col("_c")["num"], F.col("_i")["num"]).alias("num_features"),
-            F.map_concat(F.col("_c")["str"], F.col("_i")["str"]).alias("str_features"),
-        )
-    )
-    enc = encode_to_vectors(
-        flat, [f for f in dec.feature_names if f != TIMESTAMP_KEY],
-        dec.string_tables, dec.model_seed,
-    )
-    from tracker_trainer_spark.trainer.train import HAS_XGBOOST, _to_ml_vector
-
-    scored = dec.model.transform(enc if HAS_XGBOOST else _to_ml_vector(enc))
-    scores = {r.song: r.prediction for r in scored.select("song", "prediction").collect()}
+    # t at scoring = the probe decision's KSUID timestamp
+    scored = score_items(dec, candidates, now_ts=float(TS + 99999))
+    scores = {r.song: r.score for r in scored.select("song", "score").collect()}
     assert scores["a"] > max(scores[s] for s in "bcd"), scores

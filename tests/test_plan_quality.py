@@ -905,9 +905,8 @@ def test_lit_vec_bit_identity(spark, sf_dir):
     true ArrayType Literal) must be bit-identical to the unrolled
     F.array(*[F.lit(x) ..]) spelling through the zip_with/aggregate
     distance fold — the representation change that de-chattered the
-    ANN/KMeans trainers (kmeans_embedding_clusters was evicted from
-    _DRIVER_CERTIFIED on this diff; this test is the bit-identity
-    evidence backing its re-certification). NOTE: F.lit(list) would be
+    ANN/KMeans trainers (kmeans_embedding_clusters among them; this test
+    is the bit-identity evidence for that change). NOTE: F.lit(list) would be
     a tautology here — classic PySpark unrolls it into exactly
     array(*[lit(x)..]); only the ndarray path builds a real Literal."""
     import numpy as np

@@ -21,19 +21,18 @@ def test_two_phase_train_and_score(spark, timeline):
 
     # phase-2 model predicts finite values on its own training frame shape
     from tracker_trainer_spark.trainer.encode import encode_to_vectors, TIMESTAMP_KEY
-    from tracker_trainer_spark.trainer.flatten import flatten_col
+    from tracker_trainer_spark.trainer.flatten import flatten_merged
     from tracker_trainer_spark.ksuid import ksuid_timestamp
     from tracker_trainer_spark.trainer.loader import load_training_frame
 
     df = load_training_frame(spark, timeline, columns=["decision_id", "item", "context"], model="m1")
     flat = (
-        df.withColumn("_i", flatten_col("item", "item"))
-        .withColumn("_c", flatten_col("context", "context"))
+        df.withColumn("_f", flatten_merged([("context", "context"), ("item", "item")]))
         .withColumn(TIMESTAMP_KEY, ksuid_timestamp(F.col("decision_id")))
         .select(
             "decision_id", TIMESTAMP_KEY,
-            F.map_concat(F.col("_c")["num"], F.col("_i")["num"]).alias("num_features"),
-            F.map_concat(F.col("_c")["str"], F.col("_i")["str"]).alias("str_features"),
+            F.col("_f")["num"].alias("num_features"),
+            F.col("_f")["str"].alias("str_features"),
         )
     )
     enc = encode_to_vectors(

@@ -190,13 +190,14 @@ def test_zero_truncated_poisson_distribution(spark):
 
 
 def test_flatten_merged_equals_per_column_flatten(spark):
-    """flatten_merged (one Arrow round-trip) must agree exactly with
-    map_concat over per-column flatten_col results."""
+    """flatten_merged (one Arrow round-trip over both columns) must agree
+    exactly with the per-row flatten_json kernel run column by column
+    into one pair of maps."""
     import json as _json
 
     from pyspark.sql import functions as F
 
-    from tracker_trainer_spark.trainer.flatten import flatten_col, flatten_merged
+    from tracker_trainer_spark.trainer.flatten import flatten_merged
 
     rows = [
         ('{"a": 1, "b": {"c": "x", "d": [1, "y", null]}}', '{"e": true}'),
@@ -211,17 +212,15 @@ def test_flatten_merged_equals_per_column_flatten(spark):
         flatten_merged([("context", "context"), ("item", "item")]).alias("f")
     ).select(F.col("f.num").alias("num"), F.col("f.str").alias("str"))
 
-    per_col = (
-        df.withColumn("_i", flatten_col("item", "item"))
-        .withColumn("_c", flatten_col("context", "context"))
-        .select(
-            F.map_concat(F.col("_c.num"), F.col("_i.num")).alias("num"),
-            F.map_concat(F.col("_c.str"), F.col("_i.str")).alias("str"),
-        )
-    )
+    want = []
+    for item, context in rows:
+        num, strs = {}, {}
+        for raw, root in ((context, "context"), (item, "item")):
+            if raw is not None:
+                flatten_json(_json.loads(raw), root, num, strs)
+        want.append((num, strs))
 
     got = [(r["num"], r["str"]) for r in fused.collect()]
-    want = [(r["num"], r["str"]) for r in per_col.collect()]
     assert got == want
     # spot-check content, not just agreement
     assert got[0][0] == {"item.a": 1.0, "item.b.d.0": 1.0, "context.e": 1.0}

@@ -98,11 +98,6 @@ _BOUNDS_CACHE: dict[tuple, list[float]] = {}
 _BOUNDS_CACHE_MAX = 256
 
 
-def clear_boundary_cache() -> None:
-    """Drop every memoized boundary set (bench loops / tests)."""
-    _BOUNDS_CACHE.clear()
-
-
 def cached_boundaries(df: DataFrame, cache_key: tuple, key: Column,
                       num_buckets: int | None = None,
                       relative_error: float = 0.01) -> list[float]:

@@ -72,10 +72,6 @@ def timestamp_of(ksuid: str) -> float:
     return float(int.from_bytes(raw[:4], "big") + KSUID_EPOCH)
 
 
-def datetime_of(ksuid: str) -> _dt.datetime:
-    return _dt.datetime.fromtimestamp(timestamp_of(ksuid), tz=_dt.timezone.utc)
-
-
 def is_valid(ksuid, now: float | None = None) -> bool:
     """Valid = 27-char base62 AND not from the future.
 

@@ -2892,57 +2892,33 @@ LIMIT 100
 def train_encode_events(spark, sf_dir, max_features: int = 20, model_seed: int = 1):
     """The real trainer encode path over the events table: JSON flatten
     (Arrow kernel) → feature selection agg → string tables → vector
-    encode.  Exists so BENCH measures the flagship training-encode
-    throughput against the reference's ≳1,100 records/s envelope
-    (BASELINE.md derived targets).
+    encode (``encode_to_vectors``, the trainer's own assembly).  Exists
+    so BENCH measures the flagship training-encode throughput against
+    the reference's ≳1,100 records/s envelope (BASELINE.md derived
+    targets).
 
-    r8 oracle upgrade (VERDICT r7 item 8): the output now exposes the
-    assembled vector's NUMERIC slots — ``v_uid``/``v_k`` (flatten
-    passthroughs) and ``v_t`` (the appended timestamp extra) — read
-    back out of the REAL encode UDF's array by position, with the
+    The output exposes the assembled vector's NUMERIC slots: ``v_uid``
+    / ``v_k`` (flatten passthroughs) and ``v_t`` (the appended timestamp
+    extra), read back out of the encoded array by position, with the
     positions derived from the live selection result (never
     hardcoded).  Those slots are exactly SQL-derivable from the raw
-    table, so the driver's full rows+schema+hash gate now certifies
-    flatten → selection → assembly end-to-end.  The ONE slot that
-    stays outside the oracle is the xxh3 string target-encode of
-    ``context.et`` (``v_et`` is intentionally NOT in the output): the
-    xxh3-64 port cannot be expressed in pure ANSI SQL and the driver's
-    DuckDB connection accepts no registered UDFs — that arithmetic is
-    pinned instead by the golden-vector bit-parity suite
-    (tests/test_hashing_parity.py) and the local 3-scale encode tests.
-    This documented slot-level adjudication replaces the old
-    whole-query rows-only status.
+    table, so the oracle's rows+schema+hash check covers flatten →
+    selection → assembly end to end.  The one slot outside the oracle
+    is the xxh3 string target-encode of ``context.et`` (``v_et`` is not
+    in the output): xxh3-64 cannot be expressed in pure ANSI SQL and the
+    oracle's DuckDB connection registers no UDFs.  That arithmetic is
+    pinned by the golden-vector suite (tests/test_hashing_parity.py)
+    and the encode parity suite (tests/test_encode_columnar.py).
 
-    r9 profile (VERDICT r8 item 2, phase-split at sf1): the 3.9 s r8
-    wall was (a) the 3-task scan stage serializing to_json + flatten
-    input CPU (fixed: raw-column spread below, scan stage 2.35 s →
-    ~0.5 s) and (b) selection + string-stats each scanning the cached
-    flat relation (fixed: combined_feature_string_stats emits ONE
-    shared stats pass; SURVEY §7.4 item 4).
-
-    r9 follow-up (the full-registry BENCH_SF1 run re-measured the wall
-    at 3.7-5.6 s under honest toPandas + cache-drain conditions):
-    two more defects found and fixed.  (1) The in-function
-    finally-unpersist released ``flat`` BEFORE the terminal action —
-    a registry query's return is a PLAN, so the returned DataFrame
-    recomputed the whole Arrow flatten a second time (~1.5 s);
-    tracked_persist + harness release_caches() is the correct
-    lifecycle (exactly what the registry was built for this round).
-    (2) The generic encode UDF walks every row's full feature maps in
-    a Python loop (~1.8 s for 800 k rows); the flagship now uses
-    ``encode_to_vectors_columnar`` — JVM ``element_at``/``when`` slot
-    expressions + a vectorized distinct-value string encode, parity
-    pinned bit-identical by tests/test_encode_columnar.py.  Honest
-    sf1 profile after both (toPandas + drained caches, warm
-    best-of-5): flatten+cache ≈ 1.5 s (the Arrow kernel — the real
-    work), shared stats+top-k ≈ 0.45 s, tables ≈ 0.25 s, columnar
-    encode+toPandas ≈ 0.15 s ⇒ wall 2.30 s (target <2.5 s), vs
-    DuckDB's numeric-slot-only replay ~1.0 s — a subset oracle that
-    skips the flatten/xxh3 work entirely.
+    Selection and string stats share one scan of the cached flat
+    relation (``combined_feature_string_stats``).  The cached relations
+    are released by the harness (``release_caches``), not inside the
+    query: the returned plan still reads them, and an in-function
+    unpersist would make the terminal action recompute the flatten.
     """
     from tracker_trainer_spark.trainer.encode import (
         TIMESTAMP_KEY,
-        encode_to_vectors_columnar,
+        encode_to_vectors,
     )
     from tracker_trainer_spark.trainer.flatten import flatten_merged
     from tracker_trainer_spark.trainer.selection import combined_feature_string_stats
@@ -2979,17 +2955,12 @@ def train_encode_events(spark, sf_dir, max_features: int = 20, model_seed: int =
             F.col("_f")["str"].alias("str_features"),
         )
     )
-    # r9 (SURVEY §7.4 item 4): selection and string-stats share ONE scan
-    # of the cached flat relation — combined_feature_string_stats emits
-    # (feature, value|NULL) stats once; the top-k selection re-aggregates
-    # its tiny output (exact: w=1.0 partials) and the string tables read
-    # the value IS NOT NULL slice.  pairstats is domain-bounded
-    # (distinct (feature,value) pairs).  Both relations are
-    # tracked_persist, NOT finally-unpersist: the returned DataFrame's
-    # plan still references the flat InMemoryRelation, so an in-function
-    # unpersist forced the TERMINAL action to recompute the whole Arrow
-    # flatten a second time (~1.5 s at sf1 — measured, the r9 follow-up
-    # profile); the harness drains via release_caches() between queries.
+    # combined_feature_string_stats emits (feature, value|NULL) stats in
+    # one scan of the cached flat relation; the top-k selection
+    # re-aggregates its tiny output (exact: w=1.0 partials) and the
+    # string tables read the value IS NOT NULL slice.  pairstats is
+    # domain-bounded (distinct (feature,value) pairs).  Both relations
+    # are tracked_persist, released by the harness (see docstring).
     pairstats = tracked_persist(combined_feature_string_stats(flat))
     top = (
         pairstats.groupBy("feature")
@@ -3003,7 +2974,7 @@ def train_encode_events(spark, sf_dir, max_features: int = 20, model_seed: int =
         pairstats.where(F.col("value").isNotNull()), model_seed,
         allowed_features=selected, prior_mean=0.0, prior_count=0,
     )
-    encoded = encode_to_vectors_columnar(flat, selected, tables, model_seed)
+    encoded = encode_to_vectors(flat, selected, tables, model_seed)
     # vector layout = selected + extras (encode contract); positions
     # resolved from the live selection so a data change re-orders the
     # projection instead of silently reading the wrong slot
@@ -3028,7 +2999,7 @@ def train_encode_events(spark, sf_dir, max_features: int = 20, model_seed: int =
 # generator change that altered the feature space would shift
 # n_features and fail this oracle loudly at the local 3-scale gate.
 # The xxh3 string slot is deliberately absent — see the query
-# docstring's slot-level adjudication.
+# docstring.
 TRAIN_ENCODE_SQL = """
 SELECT CAST(event_id AS VARCHAR) AS decision_id,
        CAST(4 AS BIGINT) AS n_features,
@@ -3075,7 +3046,7 @@ def train_e2e_metrics(spark, sf_dir, model_seed: int = 7, max_features: int = 15
     from tracker_trainer_spark.trainer.flatten import flatten_merged
     from tracker_trainer_spark.trainer.loader import load_training_frame
     from tracker_trainer_spark.trainer.train import (
-        _to_ml_vector,
+        model_input,
         train_decision_model,
         train_propensity_model,
     )
@@ -3168,7 +3139,7 @@ def train_e2e_metrics(spark, sf_dir, model_seed: int = 7, max_features: int = 15
     enc = encode_to_vectors(
         flat, [f for f in d.feature_names if f != TIMESTAMP_KEY],
         d.string_tables, d.model_seed)
-    pred = d.model.transform(_to_ml_vector(enc))
+    pred = d.model.transform(model_input(enc))
     return pred.agg(
         F.lit(int(n_timeline)).cast("long").alias("n_timeline"),
         F.count(F.lit(1)).alias("n_scored"),

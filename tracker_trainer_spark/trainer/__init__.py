@@ -1,4 +1,4 @@
-from .flatten import flatten_json, flatten_columns  # noqa: F401
+from .flatten import flatten_json  # noqa: F401
 from .selection import select_features  # noqa: F401
 from .string_tables import string_stats, build_string_tables, StringTable  # noqa: F401
 from .weights import (  # noqa: F401

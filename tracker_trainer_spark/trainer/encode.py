@@ -5,20 +5,23 @@ row emits the chosen item (y=1, w=1) and, when count > 1, the sample
 (y=0, w=count-1); both rows share the flattened context and
 ``t`` = KSUID-embedded timestamp.
 
-Vector assembly (E2/P8): selected feature names define a fixed column
-order; numeric features pass through, string features encode via the
-per-feature StringTable, absent features are NaN (XGBoost-native
-missing). Assembly is an Arrow-batched pandas UDF over the two map
-columns with the (bounded) string tables broadcast to executors.
+Vector assembly (E2/P8, reference feature_encoder.py:138-226): selected
+feature names define a fixed slot order; numeric features pass through,
+string features encode via the per-feature StringTable, absent features
+are NULL elements (each backend's model input turns them into its own
+missing marker, see ``train.model_input``). ``encode_to_vectors`` is the
+one assembly path for training, batch scoring and the registry: a
+single Arrow UDF per batch over the two map columns, with the slot
+lookup done by Arrow kernels and the (bounded) string tables shipped
+in its closure.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ksuid import ksuid_timestamp
@@ -85,47 +88,63 @@ def encode_to_vectors(df: DataFrame, feature_names: list[str],
                       out_col: str = "features") -> DataFrame:
     """P8/E2: map columns → fixed-order array<double> feature vector.
 
-    ``feature_names`` fixes column order (selected features + extras such
-    as ``t``); missing values are NaN. The string tables are closed over
-    and shipped once per executor via Spark's task broadcast.
+    ``feature_order(feature_names, extra_num_cols)`` fixes the slots. In
+    each row a selected key's numeric value is written first, then its
+    string value (StringTable encode, or the empty-table miss encode for
+    a feature without a table) overrides it, and the extra columns
+    (``t``) override both. A slot with no value is a NULL element.
+
+    One Arrow UDF per batch: map entries are matched to slots with Arrow
+    kernels and scattered into a numpy matrix, and each distinct
+    (slot, string) pair is encoded once per batch. The string tables
+    ride in the UDF's closure, shipped with the task's Python command.
     """
-    tables = {f: StringTable(t, model_seed) for f, t in string_tables.items()}
-    names = list(feature_names)
-    for c in extra_num_cols:
-        if c not in names:
-            names.append(c)
-    index = {n: i for i, n in enumerate(names)}
-    n_features = len(names)
-    extra_cols = [F.col(c).cast("double") for c in extra_num_cols]
+    names = feature_order(feature_names, extra_num_cols)
+    width = len(names)
+    slot_names = pa.array(names, pa.string())
+    tables = [StringTable(string_tables[f], model_seed) if f in string_tables else None
+              for f in names]
+    extra_slots = np.array([names.index(c) for c in extra_num_cols], dtype=np.int64)
 
-    @F.pandas_udf("array<double>")
-    def _assemble(num: pd.Series, strs: pd.Series, *extras: pd.Series) -> pd.Series:
-        out = []
-        extra_arrays = [e.to_numpy() for e in extras]
-        for i in range(len(num)):
-            vec = np.full(n_features, np.nan)
-            nmap = num.iloc[i] or {}
-            smap = strs.iloc[i] or {}
-            for k, v in nmap.items():
-                j = index.get(k)
-                if j is not None:
-                    vec[j] = v
-            for k, s in smap.items():
-                j = index.get(k)
-                if j is None:
-                    continue
-                table = tables.get(k)
-                if table is None:
-                    vec[j] = _miss_encode(s, model_seed)
-                else:
-                    vec[j] = table.encode(s)
-            for c, arr in zip(extra_num_cols, extra_arrays):
-                vec[index[c]] = arr[i]
-            out.append(vec)
-        return pd.Series(out)
+    def encode_string(slot: int, s: str) -> float:
+        table = tables[slot]
+        return _miss_encode(s, model_seed) if table is None else table.encode(s)
 
-    result = df.withColumn(out_col, _assemble(F.col(num_col), F.col(str_col), *extra_cols))
-    return result
+    @F.arrow_udf("array<double>")
+    def _assemble(num: pa.Array, strs: pa.Array, extras: pa.Array) -> pa.Array:
+        n = len(num)
+        vec = np.full((n, width), np.nan)
+        rows, slots, values = _selected_entries(num, slot_names)
+        vec[rows, slots] = values.to_numpy(zero_copy_only=False)
+        rows, slots, values = _selected_entries(strs, slot_names)
+        codes = values.dictionary_encode()
+        n_strings = len(codes.dictionary)
+        pairs, inverse = np.unique(
+            slots * n_strings + codes.indices.to_numpy(), return_inverse=True)
+        strings = codes.dictionary.to_pylist()
+        encoded = np.array([encode_string(p // n_strings, strings[p % n_strings])
+                            for p in pairs.tolist()], dtype=np.float64)
+        vec[rows, slots] = encoded[inverse]
+        vec[:, extra_slots] = pc.list_flatten(extras).to_numpy(
+            zero_copy_only=False).reshape(n, len(extra_slots))
+        flat = vec.ravel()
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
+        return pa.ListArray.from_arrays(offsets, pa.array(flat, mask=np.isnan(flat)))
+
+    extras = F.array(*[F.col(c).cast("double") for c in extra_num_cols]).cast("array<double>")
+    return df.withColumn(out_col, _assemble(F.col(num_col), F.col(str_col), extras))
+
+
+def _selected_entries(maps: pa.Array, slot_names: pa.Array):
+    """(row, slot, value) of every non-null map entry whose key is a
+    slot name, for one Arrow batch of a map column."""
+    lists = maps.view(pa.list_(pa.struct([maps.type.key_field, maps.type.item_field])))
+    keys, values = pc.list_flatten(lists).flatten()
+    slots = pc.index_in(keys, value_set=slot_names)
+    keep = pc.and_(slots.is_valid(), values.is_valid())
+    return (pc.filter(pc.list_parent_indices(lists), keep).to_numpy(),
+            pc.filter(slots, keep).to_numpy().astype(np.int64),
+            pc.filter(values, keep))
 
 
 def _miss_encode(s: str, model_seed: int) -> float:
@@ -143,70 +162,3 @@ def feature_order(selected: list[str], extras: tuple = (TIMESTAMP_KEY,)) -> list
         if c not in names:
             names.append(c)
     return names
-
-
-def _columnar_string_encode(table: StringTable | None, model_seed: int):
-    """Vectorized per-FEATURE string encode: one Arrow-batched UDF over
-    the single string column, encoding each DISTINCT value once per
-    batch (string-table domains are capped and xxh3 misses repeat —
-    distinct ≪ rows), instead of re-walking every row's full feature
-    map.  Same arithmetic as encode_to_vectors' per-row loop
-    (StringTable.encode / _miss_encode), pinned bit-identical by
-    tests/test_encode_columnar.py."""
-
-    @F.pandas_udf("double")
-    def _enc(s: pd.Series) -> pd.Series:
-        uniq = s.dropna().unique()
-        if table is None:
-            mapping = {v: _miss_encode(v, model_seed) for v in uniq}
-        else:
-            mapping = {v: table.encode(v) for v in uniq}
-        return s.map(mapping)
-
-    return _enc
-
-
-def encode_to_vectors_columnar(
-        df: DataFrame, feature_names: list[str],
-        string_tables: dict[str, list[int]], model_seed: int,
-        num_col: str = "num_features", str_col: str = "str_features",
-        extra_num_cols: tuple = (TIMESTAMP_KEY,),
-        out_col: str = "features") -> DataFrame:
-    """Scale-path spelling of :func:`encode_to_vectors` — bit-identical
-    output (P8/E2 parity, reference feature_encoder.py:138-226), but the
-    vector assembly stays JVM-side: one ``element_at``/``when``
-    expression chain per slot feeding a single ``F.array``, all inside
-    whole-stage codegen, with Python touched only by the vectorized
-    per-feature string encode above.  The generic per-row map-walk UDF
-    (encode_to_vectors) pays the full Arrow round-trip of BOTH feature
-    maps plus a Python loop over every row × slot; at 100 TB the
-    row-loop is the classic UDF slow path the brief forbids in hot
-    paths.  Slot semantics replicated exactly:
-
-    - str overrides num for the same key (the loop writes num first,
-      str second) → ``when(str IS NOT NULL, enc(str)).otherwise(num)``;
-    - extras (``t``) override any map entry for that key → the slot
-      reads the COLUMN, never the maps;
-    - missing everywhere → NULL: the loop prefills ``np.nan``, but the
-      pandas→Arrow return conversion of ``array<double>`` lands those
-      as nulls (observed contract, pinned by the parity suite), so the
-      columnar slots simply stay NULL (``element_at`` on a missing key)
-      rather than re-introducing a NaN the generic path never ships.
-
-    One pandas-UDF hop per STRING-bearing slot: right for the trainer
-    corpus (one string feature per the selection result); a schema with
-    dozens of string features would amortize better through the
-    one-hop generic UDF — documented trade, not a silent cliff.
-    """
-    tables = {f: StringTable(t, model_seed) for f, t in string_tables.items()}
-    names = feature_order(feature_names, extra_num_cols)
-    slots = []
-    for f in names:
-        if f in extra_num_cols:
-            slots.append(F.col(f).cast("double"))
-            continue
-        enc = _columnar_string_encode(tables.get(f), model_seed)
-        sval = F.element_at(F.col(str_col), F.lit(f))
-        nval = F.element_at(F.col(num_col), F.lit(f))
-        slots.append(F.when(sval.isNotNull(), enc(sval)).otherwise(nval))
-    return df.withColumn(out_col, F.array(*slots))

@@ -6,10 +6,10 @@ Reference semantics (reference: src/trainer/code/feature_flattener.py:22-63):
 - roots are the column names (``item``, ``context``).
 
 The key space is data-dependent, so this is genuinely dynamic-schema
-work — the one place the engine uses Python in the hot path, as an
-Arrow-batched pandas UDF returning two typed maps (numeric + string
-features). Everything downstream (selection, string stats, vector
-assembly) composes JVM-side on these maps.
+work, done in Python as an Arrow-batched pandas UDF returning two typed
+maps (numeric + string features). Selection and string stats compose
+JVM-side on these maps; vector assembly reads them in the encode's one
+Arrow UDF (``encode.encode_to_vectors``).
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 FLAT_STRUCT = "num: map<string,double>, str: map<string,string>"
@@ -52,38 +52,14 @@ def _walk(obj, path, num, strs):
         raise ValueError(f"not JSON-flattenable: {obj!r}")
 
 
-def _make_flatten_udf(root: str):
-    @F.pandas_udf(f"struct<{FLAT_STRUCT}>")
-    def _flatten(col: pd.Series) -> pd.DataFrame:
-        nums, strss = [], []
-        for raw in col:
-            if raw is None:
-                nums.append({})
-                strss.append({})
-                continue
-            n, s = flatten_json(json.loads(raw), root)
-            nums.append(n)
-            strss.append(s)
-        return pd.DataFrame({"num": nums, "str": strss})
-
-    return _flatten
-
-
-def flatten_col(col, root: str) -> Column:
-    """Column: JSON-string column → struct(num: map, str: map)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _make_flatten_udf(root)(c)
-
-
 def flatten_merged(cols_and_roots) -> Column:
-    """Flatten several JSON-string columns in ONE Arrow round-trip and
-    return the merged struct(num, str) directly.
+    """Column: flatten several JSON-string columns, each under its own
+    root, into one merged struct(num: map, str: map).
 
-    Equivalent to map_concat over per-column flatten_col results (roots
-    are distinct path prefixes, so key spaces cannot collide), but pays
-    one pandas-UDF invocation per batch instead of one per column —
-    each extra chained pandas UDF adds a full JVM→Arrow→Python→Arrow→JVM
-    hop for the whole batch.
+    The one flatten of the engine. Roots are distinct path prefixes, so
+    the key spaces cannot collide and each row's maps equal the union of
+    the per-column ``flatten_json`` results. One pandas-UDF invocation
+    per batch covers every column.
     """
     roots = tuple(root for _, root in cols_and_roots)
 
@@ -102,21 +78,3 @@ def flatten_merged(cols_and_roots) -> Column:
 
     ins = [F.col(c) if isinstance(c, str) else c for c, _ in cols_and_roots]
     return _flatten_many(*ins)
-
-
-def flatten_columns(df: DataFrame, cols=("item", "context")) -> DataFrame:
-    """Add ``<col>_flat`` struct columns for each JSON-string column."""
-    for c in cols:
-        df = df.withColumn(f"{c}_flat", flatten_col(c, c))
-    return df
-
-
-def merged_feature_maps(*flat_structs) -> tuple[Column, Column]:
-    """Union several *_flat structs into one (num, str) map pair.
-
-    Roots are distinct path prefixes, so key spaces never collide and a
-    plain map_concat is exact.
-    """
-    nums = [s["num"] for s in flat_structs]
-    strs = [s["str"] for s in flat_structs]
-    return F.map_concat(*nums), F.map_concat(*strs)

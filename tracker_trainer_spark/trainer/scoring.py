@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .encode import TIMESTAMP_KEY, encode_to_vectors
 from .flatten import flatten_merged
-from .train import TrainedModel, HAS_XGBOOST, _nulls_to_nan, _to_ml_vector
+from .train import TrainedModel, model_input
 
 
 def score_items(tm: TrainedModel, df: DataFrame,
@@ -51,10 +51,7 @@ def score_items(tm: TrainedModel, df: DataFrame,
         flat, [f for f in tm.feature_names if f != TIMESTAMP_KEY],
         tm.string_tables, tm.model_seed,
     )
-    if HAS_XGBOOST:
-        scored = tm.model.transform(_nulls_to_nan(enc))
-    else:
-        scored = tm.model.transform(_to_ml_vector(enc))
+    scored = tm.model.transform(model_input(enc))
     return (
         scored.withColumnRenamed("prediction", out_col)
         .drop("features", "num_features", "str_features", TIMESTAMP_KEY,

@@ -65,13 +65,21 @@ class TrainedModel:
     metadata: dict = field(default_factory=dict)
 
 
+def model_input(df: DataFrame, col: str = "features") -> DataFrame:
+    """Encoded ``array<double>`` → the active backend's model input.
+
+    Missing features arrive as NULL elements (see ``encode_to_vectors``).
+    XGBoost reads NaN as missing; the fallback backend needs an ml
+    Vector and imputes 0.0. Every fit and every scoring pass goes
+    through here, so a model always scores inputs converted the way its
+    training inputs were."""
+    return _nulls_to_nan(df, col) if HAS_XGBOOST else _to_ml_vector(df, col)
+
+
 def _to_ml_vector(df: DataFrame, col: str = "features") -> DataFrame:
     """array<double> → ml Vector, missing→0.0 (fallback backend only).
 
-    Missing features arrive as NULL elements, not NaN: the encode
-    kernel's NaN markers become Arrow nulls on the pandas→JVM hop
-    (pandas uses NaN as its null sentinel). Impute both spellings —
-    array_to_vector asserts non-null elements.
+    Impute both NULL and NaN: array_to_vector asserts non-null elements.
     """
     from pyspark.ml.functions import array_to_vector
 
@@ -137,17 +145,10 @@ def train_propensity_model(spark: SparkSession, timeline_path: str,
 def propensity_scores(propensity: TrainedModel, encoded: DataFrame,
                       out_col: str = "propensity") -> DataFrame:
     """M2: batch predict p(chosen | features) for each row."""
-    if HAS_XGBOOST:
-        scored = propensity.model.transform(_nulls_to_nan(encoded))
-        # binary classifier probability of class 1
-        from pyspark.ml.functions import vector_to_array
-
-        return scored.withColumn(out_col, vector_to_array("probability")[1]).drop(
-            "rawPrediction", "probability", "prediction"
-        )
-    scored = propensity.model.transform(_to_ml_vector(encoded))
     from pyspark.ml.functions import vector_to_array
 
+    scored = propensity.model.transform(model_input(encoded))
+    # binary classifier probability of class 1
     return scored.withColumn(out_col, vector_to_array("probability")[1]).drop(
         "rawPrediction", "probability", "prediction"
     )
@@ -240,8 +241,8 @@ def _fit(encoded: DataFrame, objective: str, seed: int,
     None keeps the reference defaults.  (On the GBT fallback, driver
     wall time is rounds x depth-levels x job floor — the bounded e2e
     registry row trains with a small budget for exactly that reason.)"""
+    vec = model_input(encoded)
     if HAS_XGBOOST:
-        encoded = _nulls_to_nan(encoded)  # declared missing below is NaN
         common = dict(
             features_col="features", label_col="y", weight_col="w",
             max_depth=max_depth or XGB_PARAMS["max_depth"],
@@ -256,14 +257,14 @@ def _fit(encoded: DataFrame, objective: str, seed: int,
                 validation_indicator_col="is_val",
                 **common,
             )
-            encoded = encoded.withColumn("is_val", F.rand(seed + 7) < 0.3)  # L7
+            vec = vec.withColumn("is_val", F.rand(seed + 7) < 0.3)  # L7
         else:
             est = SparkXGBRegressor(
                 objective="reg:squarederror",
                 n_estimators=num_rounds or XGB_PARAMS["num_round_decision"],
                 **common,
             )
-        return est.fit(encoded)
+        return est.fit(vec)
 
     # fallback backend: pyspark.ml GBT (NaN→0 imputation) with the
     # reference's validation-based stopping shape (propensities.py:
@@ -281,7 +282,7 @@ def _fit(encoded: DataFrame, objective: str, seed: int,
     common = dict(featuresCol="features", labelCol="y", weightCol="w",
                   maxDepth=max_depth or XGB_PARAMS["max_depth"], seed=seed,
                   validationIndicatorCol="is_val")
-    vec = _to_ml_vector(encoded).withColumn("is_val", F.rand(seed + 7) < 0.3)
+    vec = vec.withColumn("is_val", F.rand(seed + 7) < 0.3)
     if objective == "binary":
         est = GBTClassifier(maxIter=num_rounds or 40, **common)
         vec = vec.withColumn("y", F.col("y").cast("double"))
