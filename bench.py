@@ -1,5 +1,12 @@
-"""Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR and print one
-JSON line {"metric": ..., "value": total_sec, "unit": "sec", "queries": ...}.
+"""Registry benchmark: time the registry queries at $SPARK_GRAFT_SF_DIR
+against their DuckDB oracles on the same files, and print one JSON line
+{"metric": "headline_queries_total", "value": total_sec, "unit": "sec", ...}.
+
+Usage: python bench.py [query ...]
+
+With no arguments every registry query runs; named queries run alone, in
+registry order. Any scale runs the same way: point $SPARK_GRAFT_SF_DIR at
+its parquet directory (sf0.1 by default, or a replicated sf1 copy).
 
 Each query is fully materialized so the measured time covers scan →
 shuffle → action, not plan construction. Materialization is Arrow on BOTH
@@ -7,6 +14,12 @@ engines (Spark ``toPandas()``, DuckDB ``.df()``): row-object ``collect()``
 / ``fetchall()`` deserialization dominated wide results (propensity
 explode: 0.95 s collect vs 0.43 s Arrow for identical engine work) and
 measures the client protocol, not the engine.
+
+Per query, BENCH_DETAIL.json also keeps the per-layer columns of the
+reported (fastest) repeat: construction seconds and the jobs it started,
+Catalyst analysis / optimization / planning, action seconds, jobs, stages,
+tasks, shuffle-write and spill bytes, and rows fetched. They are read from
+Spark's status store and Catalyst's phase tracker after the clock stops.
 """
 
 from __future__ import annotations
@@ -15,44 +28,118 @@ import gc
 import json
 import os
 import sys
+import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.spans import StatusStore, catalyst_phases  # noqa: E402
 from tracker_trainer_spark.queries import ORACLES, QUERIES, release_caches  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+REPEATS = 3
+# a runaway oracle spelling is interrupted and recorded, not waited on
+ORACLE_TIMEOUT_S = 900.0
+STORE_KEYS = ("jobs", "stages", "tasks", "shuffle_write_bytes", "spill_bytes")
 
 
-def duckdb_timings(sf_dir: str, threads: str) -> dict[str, float]:
-    """Best-of-3 runtime of each query's DuckDB oracle on the same
+def drain(spark) -> None:
+    """Drop everything a query left behind, so the next run pays full
+    construction:
+    - clearCache: pinned InMemoryRelations (shingles, vocab, baskets);
+    - release_caches: tracked persists and the trained-artifact memo;
+    - gc.collect: localCheckpoint blocks are released only once the
+      dropped DataFrame's RDD is GC'd and the ContextCleaner drains."""
+    spark.catalog.clearCache()
+    release_caches()
+    gc.collect()
+
+
+def run_repeat(spark, store: StatusStore, fn, sf_dir: str) -> dict:
+    """One timed run of registry query ``fn``, its per-layer columns, then
+    the drain (outside the timed region).
+
+    Besides the query itself, only ``store.mark()`` (one py4j call) runs
+    inside the clock; the status store and Catalyst's phase tracker are
+    read after it stops."""
+    mark = store.mark()
+    start = time.perf_counter()
+    df = fn(spark, sf_dir)
+    built = time.perf_counter()
+    built_mark = store.mark()
+    fetch = time.perf_counter()
+    rows = len(df.toPandas())
+    end = time.perf_counter()
+
+    rec = {"wall_s": end - start, "construct_s": built - start,
+           "construct_jobs": built_mark - mark,
+           **{f"{phase}_s": s for phase, s in catalyst_phases(df).items()},
+           "action_s": end - fetch, "rows": rows}
+    executed = store.since(mark)
+    rec.update({k: executed[k] for k in STORE_KEYS})
+    del df
+    drain(spark)
+    return rec
+
+
+def duckdb_timings(sf_dir: str, threads: str,
+                   names: list[str]) -> tuple[dict[str, float], dict[str, str]]:
+    """Best-of-3 runtime of each named query's DuckDB oracle on the same
     parquet and thread budget — the single-node engine yardstick the
     Spark ratios are judged against (BASELINE.md 'within 2× of a tuned
-    single-node engine'). Measured here, not argued in prose."""
+    single-node engine'). Measured here, not argued in prose.
+
+    An oracle that fails (spill cap, interrupt) is returned in the second
+    map with its error and left out of the first."""
     import duckdb
 
     con = duckdb.connect()
     con.execute(f"SET threads TO {int(threads)}")
+    # A few all-pairs oracle spellings spill without bound at sf1 (the
+    # Spark side uses LSH / banding instead); capped, they fail fast.
+    spill_dir = os.path.join(tempfile.gettempdir(), "bench_duckdb_spill")
+    con.execute(f"SET temp_directory = '{spill_dir}'")
+    con.execute("SET max_temp_directory_size = '24GiB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     out: dict[str, float] = {}
-    for name, sql in ORACLES.items():
+    failed: dict[str, str] = {}
+    for name in names:
+        if name not in ORACLES:
+            continue
         runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            con.execute(sql).df()
-            runs.append(time.perf_counter() - start)
+        try:
+            for _ in range(REPEATS):
+                timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+                timer.start()
+                try:
+                    start = time.perf_counter()
+                    con.execute(ORACLES[name]).df()
+                    runs.append(time.perf_counter() - start)
+                finally:
+                    timer.cancel()
+        except duckdb.Error as e:
+            first = (str(e).splitlines() or [""])[0]
+            failed[name] = f"{type(e).__name__}: {first[:200]}"
+            print(f"oracle failed: {name}: {failed[name]}", file=sys.stderr)
+            continue
         out[name] = min(runs)  # unrounded: sub-ms oracles must not
         # round to 0.0 and silently vanish from the ratio map
     con.close()
-    return out
+    return out, failed
 
 
-def main() -> None:
+def main(argv: list[str]) -> None:
+    unknown = sorted(set(argv) - set(QUERIES))
+    if unknown:
+        sys.exit(f"unknown registry queries: {' '.join(unknown)}")
+    names = [n for n in QUERIES if not argv or n in argv]
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -68,46 +155,34 @@ def main() -> None:
                           "spark.sql.files.maxPartitionBytes": "4194304",
                       })
     spark.sparkContext.setLogLevel("ERROR")
+    store = StatusStore(spark)
 
-    timings: dict[str, float] = {}
     # warm the JVM code paths and the per-core Python UDF worker pool so
     # per-query numbers measure steady state, not process startup
     from tracker_trainer_spark.session import warm_python_workers
 
     warm_python_workers(spark)
     QUERIES["events_type_stats"](spark, sf_dir).toPandas()
-    QUERIES["dedup_minhash_candidates"](spark, "/root/testdata/sf0.001").toPandas()
+    QUERIES["dedup_minhash_candidates"](spark, sf_dir).toPandas()
+    drain(spark)
 
     # best-of-3 per query: single-shot numbers on a shared box mix
     # scheduler noise into the measurement (observed 5-10x swings on
     # identical plans); the min of three runs reports steady-state engine
-    # time while still executing every query end-to-end each time
-    for name, fn in QUERIES.items():
-        runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            fn(spark, sf_dir).toPandas()
-            runs.append(time.perf_counter() - start)
-            # r10 measurement-bug fix (VERDICT r9 item 1): the drains
-            # used to run once per QUERY, after its three repeats — so
-            # runs 2-3 of any query that persists an intermediate
-            # (CacheManager matches canonicalized plans across repeat
-            # constructions) or memoizes a training artifact skipped the
-            # construction work, and min-of-3 reported a warm-cache time
-            # the driver's single-shot runs never see.  Draining after
-            # EVERY timed run (drain cost outside the timed region)
-            # makes each repeat pay full construction:
-            # - clearCache: pinned InMemoryRelations (shingles, vocab,
-            #   baskets) must not leak into the next run/query
-            # - release_caches: tracked-persist registry (ADVICE r8)
-            #   + the trained_artifact session memo (VERDICT r9 item 1)
-            # - gc.collect: localCheckpoint blocks release only when the
-            #   dropped DataFrame's RDD is GC'd and the ContextCleaner
-            #   drains (ADVICE r5)
-            spark.catalog.clearCache()
-            release_caches()
-            gc.collect()
-        timings[name] = round(min(runs), 3)
+    # time while still executing every query end-to-end each time.  The
+    # drain after EVERY repeat makes each one pay full construction:
+    # CacheManager matches canonicalized plans across repeat
+    # constructions, so an undrained persist or training memo would let
+    # repeats 2-3 skip work a single-shot run never skips.
+    timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    for name in names:
+        runs = [run_repeat(spark, store, QUERIES[name], sf_dir)
+                for _ in range(REPEATS)]
+        best = min(runs, key=lambda r: r["wall_s"])
+        timings[name] = round(best["wall_s"], 3)
+        layers[name] = {k: round(v, 4) if isinstance(v, float) else v
+                        for k, v in best.items()}
 
     # Measure Spark's fixed per-query floor on THIS box right now:
     # best-of-5 of the smallest registry-shaped query (scan the 5-row
@@ -132,7 +207,7 @@ def main() -> None:
         floor_runs.append(time.perf_counter() - start)
     job_floor = min(floor_runs)
 
-    duck = duckdb_timings(sf_dir, cpus)
+    duck, oracle_failed = duckdb_timings(sf_dir, cpus, names)
     ratios = {n: round(timings[n] / duck[n], 2)
               for n in timings if duck.get(n, 0) > 0}
     duck = {n: round(v, 4) for n, v in duck.items()}  # rounded for display
@@ -162,8 +237,7 @@ def main() -> None:
         "corrected_ratio": round(eb_corr / eb_duck, 2) if eb_duck else None,
     }
 
-    # Full per-query maps (98 queries × 3 maps ≈ 9 KB) overflow the
-    # driver's ~2 KB tail capture (BENCH_r02 came back parsed:null), so
+    # Full per-query maps overflow a ~2 KB tail capture of stdout, so
     # they go to a sidecar file and the printed line stays compact: the
     # totals, ratio distribution, and the 10 slowest queries.
     detail = {
@@ -171,7 +245,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "layers": layers,
         "duckdb_s": duck,
+        "oracle_failed": oracle_failed,
         "spark_over_duckdb": ratios,
         "spark_job_floor_s": round(job_floor, 4),
         "overhead_corrected_total_s": corrected_total,
@@ -219,4 +295,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -4,7 +4,9 @@ The test suite runs no script, so moving a helper between package
 modules can break ``scripts/*.py``, ``bench.py``, ``__spark_entry__.py``
 or ``perfbench/*.py`` without any other test noticing.  This reads each
 file's ``import`` statements with ``ast`` (nested ones included) and
-resolves every ``tracker_trainer_spark`` module and name they mention.
+resolves every ``tracker_trainer_spark`` and ``perfbench`` module and name
+they mention: ``bench.py`` reads Spark's status store through
+``perfbench.spans``, so a rename there must fail here too.
 The perfbench tracer patches package functions by name
 (``tr.wrap(module, "attr")`` / ``tr.wrap_context(module, "attr")``), so
 each such target must resolve too, or ``--trace 1`` breaks on a rename.
@@ -20,7 +22,7 @@ from pathlib import Path
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
-PACKAGE = "tracker_trainer_spark"
+PACKAGES = ("tracker_trainer_spark", "perfbench")
 PERFBENCH = sorted(REPO.glob("perfbench/*.py"))
 FILES = sorted(
     [*REPO.glob("scripts/*.py"), *PERFBENCH,
@@ -28,16 +30,16 @@ FILES = sorted(
 
 
 def _package_imports(path: Path) -> list[tuple[str, str | None]]:
-    """(module, name) for every package import in ``path``; name is None
-    for a plain ``import module``."""
+    """(module, name) for every import of a repo package in ``path``;
+    name is None for a plain ``import module``."""
     found = []
     for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
         if isinstance(node, ast.ImportFrom) and node.level == 0 and (
-                node.module or "").split(".")[0] == PACKAGE:
+                node.module or "").split(".")[0] in PACKAGES:
             found += [(node.module, alias.name) for alias in node.names]
         elif isinstance(node, ast.Import):
             found += [(alias.name, None) for alias in node.names
-                      if alias.name.split(".")[0] == PACKAGE]
+                      if alias.name.split(".")[0] in PACKAGES]
     return found
 
 
@@ -97,6 +99,7 @@ def test_scan_sees_imports():
     # pass every case above vacuously
     assert ("tracker_trainer_spark.queries", "QUERIES") in _package_imports(
         REPO / "__spark_entry__.py")
+    assert ("perfbench.spans", "StatusStore") in _package_imports(REPO / "bench.py")
     assert ("tracker_trainer_spark.trainer", "train", "encode_to_vectors") in (
         _wrap_targets(REPO / "perfbench" / "retrain.py"))
     assert ("tracker_trainer_spark.ingest", "lock", "timeline_lock") in (

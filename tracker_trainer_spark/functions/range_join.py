@@ -128,7 +128,7 @@ def anchored_interval_join(
     one interval's matches across two bins and forces the consumer to
     re-shuffle by interval id — the exchange this variant deletes
     (profiled in multitouch_attribution: a 39.6 MB purchase-keyed
-    exchange + one stage level at sf1, scripts/profile_mta.py).
+    exchange + one stage level at sf1).
 
     Output keeps the ``_anchor_bin`` column — the consumer must include
     it (plus the `on` keys) in its window/groupBy partitioning for the

@@ -2384,8 +2384,8 @@ def events_before_purchase(spark, sf_dir):
     residual, NOT a theta join, and a hot user's timeline still shards
     by bin; the flip makes every match of a purchase land in the same
     partition, so the per-purchase aggregate below runs WITHOUT its
-    own exchange (the same stage-level fix profiled for
-    multitouch_attribution, scripts/profile_mta.py).  Join inputs pin
+    own exchange (the same stage-level fix measured on
+    multitouch_attribution at sf1).  Join inputs pin
     to spark.sql.shuffle.partitions and the join is shuffle-hash (the
     hash agg consumer makes SMJ's sorts pure overhead).  Zero-event
     purchases are re-attached by a left join against the (small)

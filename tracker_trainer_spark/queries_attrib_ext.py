@@ -54,8 +54,8 @@ def multitouch_attribution(spark, sf_dir):
     differ only in summation order and the r4 output absorbs that
     (the per-row credits themselves are bit-equal).
 
-    Scale/wall (r8, VERDICT r7 item 3 — profiled first,
-    scripts/profile_mta.py): the r7 shape's sf1 wall split into the
+    Scale/wall (profiled stage by stage at sf1 before the rewrite):
+    the previous shape's sf1 wall split into the
     two event scans (~0.5 s), the bin join stage (12.5 s executor /
     7.1 s CPU across 32 tasks), and a 39.6 MB purchase-keyed exchange
     + 2.2M-row window sort (5.0 s executor) — stage-chain depth, not

@@ -92,8 +92,8 @@ def part_affinity_recs(spark, sf_dir):
     integer or a correctly-rounded IEEE expression over exact integers
     (identical doubles in both engines, so no rounded-tie hazard).
 
-    r7 pair shape (profiled at sf1, scripts/profile_pairs.py): the r6
-    basket spelling built per-order arrays with collect_set and exploded
+    Pair shape (profiled stage by stage at sf1): the earlier basket
+    spelling built per-order arrays with collect_set and exploded
     pairs scan-side — but the collect_set aggregation itself dominated
     the query (~6.5 s of a ~10 s wall at sf1: array buffers defeat the
     codegen fixed-width agg path AND map-side combine). Pairs now come

@@ -57,13 +57,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Registry of persisted relations still live after a query returned its
 # DataFrame: a registry query cannot unpersist inside its own body — the
 # terminal action happens in the caller — so queries that persist a
-# shared relation register it here and long-running harnesses (bench.py,
-# scripts/sf1_bench.py, scripts/qtime.py) call ``release_caches()``
-# between queries.  A caller that never calls it (e.g. one that runs
-# ``__spark_entry__.queries()`` in a loop) falls back to Spark's LRU
-# block eviction — MEMORY_AND_DISK blocks are evictable, so accumulation
-# degrades to the shuffle-file storage posture the persists replaced,
-# never OOM.
+# shared relation register it here and long-running harnesses (bench.py
+# after every timed repeat, perfbench's registry workload) call
+# ``release_caches()`` between queries.  A caller that never calls it
+# (e.g. one that runs ``__spark_entry__.queries()`` in a loop) falls
+# back to Spark's LRU block eviction — MEMORY_AND_DISK blocks are
+# evictable, so accumulation degrades to the shuffle-file storage
+# posture the persists replaced, never OOM.
 _LIVE_CACHES: list[DataFrame] = []
 
 

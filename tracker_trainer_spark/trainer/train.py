@@ -187,28 +187,27 @@ def train_decision_model(spark: SparkSession, timeline_path: str,
             reward_col.alias("y"),
         )
         .withColumn("w", F.lit(1.0))
-        # P6 keep-decision drawn here (cached ⇒ one draw per row); seed
-        # offset decorrelates from the Poisson (seed) and noise (seed+1)
+        # P6 keep-decision drawn here (read via cached ``weighted`` ⇒ one
+        # draw per row); seed offset decorrelates from Poisson and noise
         .withColumn("_keep_context", context_keep(model_seed + 3))
-        .cache()
     )
+    # score propensities on phase-1's feature space
+    enc1 = encode_to_vectors(
+        flat, [f for f in propensity.feature_names if f != TIMESTAMP_KEY],
+        propensity.string_tables, propensity.model_seed,
+    )
+    scored = propensity_scores(propensity, enc1)
+    ipw = inverse_propensity_weight("propensity", propensity.mean_item_count or 1.0)
+    weighted = (
+        scored.withColumn("w", ipw * zero_truncated_poisson(model_seed))
+        .drop("features", "propensity")
+    )
+    # P6: context dropout AFTER propensity scoring (ref computes the
+    # weights from the full df, decision_trainer.py:106-108) and
+    # BEFORE the decision-model feature path (:119). Cached: every reader
+    # below would otherwise re-run the phase-1 encode + propensity model
+    weighted = drop_context_features(weighted).cache()
     try:
-        # score propensities on phase-1's feature space
-        enc1 = encode_to_vectors(
-            flat, [f for f in propensity.feature_names if f != TIMESTAMP_KEY],
-            propensity.string_tables, propensity.model_seed,
-        )
-        scored = propensity_scores(propensity, enc1)
-        ipw = inverse_propensity_weight("propensity", propensity.mean_item_count or 1.0)
-        weighted = (
-            scored.withColumn("w", ipw * zero_truncated_poisson(model_seed))
-            .drop("features", "propensity")
-        )
-        # P6: context dropout AFTER propensity scoring (ref computes the
-        # weights from the full df, decision_trainer.py:106-108) and
-        # BEFORE the decision-model feature path (:119)
-        weighted = drop_context_features(weighted)
-
         selected = select_features(weighted, max_features)
         stats = string_stats(weighted)
         reward_mean = weighted.agg(F.avg("y")).first()[0] or 0.0
@@ -226,7 +225,7 @@ def train_decision_model(spark: SparkSession, timeline_path: str,
                       num_rounds=num_rounds, max_depth=max_depth)
         names = feature_order(selected)
     finally:
-        flat.unpersist()
+        weighted.unpersist()
     return TrainedModel(
         model=fitted, feature_names=names, string_tables=tables,
         model_seed=model_seed, mean_item_count=propensity.mean_item_count,
