@@ -15,11 +15,14 @@ engines (Spark ``toPandas()``, DuckDB ``.df()``): row-object ``collect()``
 explode: 0.95 s collect vs 0.43 s Arrow for identical engine work) and
 measures the client protocol, not the engine.
 
-Per query, BENCH_DETAIL.json also keeps the per-layer columns of the
+Per query, the detail file also keeps the per-layer columns of the
 reported (fastest) repeat: construction seconds and the jobs it started,
 Catalyst analysis / optimization / planning, action seconds, jobs, stages,
 tasks, shuffle-write and spill bytes, and rows fetched. They are read from
 Spark's status store and Catalyst's phase tracker after the clock stops.
+Only a full-registry run at the default sf0.1 directory rewrites the
+committed BENCH_DETAIL.json; any other run writes its own file under the
+git-ignored .bench_work/ (see ``detail_path``).
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from perfbench.spans import StatusStore, catalyst_phases  # noqa: E402
 from tracker_trainer_spark.queries import ORACLES, QUERIES, release_caches  # noqa: E402
 from tracker_trainer_spark.session import get_spark  # noqa: E402
 
+REPO = os.path.dirname(os.path.abspath(__file__))
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 REPEATS = 3
@@ -56,6 +60,16 @@ def drain(spark) -> None:
     spark.catalog.clearCache()
     release_caches()
     gc.collect()
+
+
+def detail_path(default_sf_dir: bool, sf: str, n_queries: int) -> str:
+    """Repo-relative path of a run's detail file: the committed
+    BENCH_DETAIL.json for the full registry at the default sf0.1
+    directory ($SPARK_GRAFT_SF_DIR unset), else
+    ``.bench_work/BENCH_DETAIL-sf<sf>-<n>q.json``."""
+    if default_sf_dir and n_queries == len(QUERIES):
+        return "BENCH_DETAIL.json"
+    return os.path.join(".bench_work", f"BENCH_DETAIL-sf{sf}-{n_queries}q.json")
 
 
 def run_repeat(spark, store: StatusStore, fn, sf_dir: str) -> dict:
@@ -254,9 +268,9 @@ def main(argv: list[str]) -> None:
         "engine_bound": engine_bound,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as f:
+    detail_file = detail_path("SPARK_GRAFT_SF_DIR" not in os.environ, sf, len(names))
+    os.makedirs(os.path.dirname(os.path.join(REPO, detail_file)), exist_ok=True)
+    with open(os.path.join(REPO, detail_file), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
 
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
@@ -272,7 +286,7 @@ def main(argv: list[str]) -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": slowest,  # 10 slowest; full map in BENCH_DETAIL.json
+        "queries": slowest,  # 10 slowest; full map in the detail file
         "n_queries": len(timings),
         "duckdb_total_s": duck_total,
         "spark_over_duckdb_median": median_ratio,
@@ -289,7 +303,7 @@ def main(argv: list[str]) -> None:
         # Spark's fixed constant, not the engine)
         "engine_bound": engine_bound,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail_file,
     }))
     spark.stop()
 

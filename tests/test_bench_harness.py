@@ -1,5 +1,6 @@
 """``bench.py``'s per-repeat body: the per-layer columns it records and
-the drain it runs after every timed repeat.
+the drain it runs after every timed repeat; and which detail file a run
+writes.
 
 Two cheap registry queries at sf0.001 that leave state behind:
 ``customer_rfm_segments`` registers a tracked persist and
@@ -38,3 +39,15 @@ def test_run_repeat_records_layers_and_drains(spark, sf_dir):
         assert not tables._LIVE_CACHES, name
         assert not tables._ARTIFACT_CACHE, name
     assert all(left_behind.values()), left_behind
+
+
+def test_detail_path_only_full_default_run_writes_artifact():
+    """Only the full registry at the default sf0.1 directory rewrites the
+    committed BENCH_DETAIL.json; a subset or another scale gets its own
+    git-ignored file, named by scale and query count."""
+    full = len(QUERIES)
+    assert bench.detail_path(True, "0.1", full) == "BENCH_DETAIL.json"
+    assert bench.detail_path(True, "0.1", 2) == ".bench_work/BENCH_DETAIL-sf0.1-2q.json"
+    assert (bench.detail_path(False, "0.001", full)
+            == f".bench_work/BENCH_DETAIL-sf0.001-{full}q.json")
+    assert bench.detail_path(False, "0.001", 2) == ".bench_work/BENCH_DETAIL-sf0.001-2q.json"

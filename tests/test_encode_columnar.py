@@ -1,26 +1,35 @@
-"""encode_to_vectors ≡ a per-row Python oracle, bit for bit.
+"""encode_to_vectors and encode_json_to_vectors ≡ a per-row Python
+oracle, bit for bit.
 
-``encode_to_vectors`` assembles feature vectors with Arrow kernels and a
-numpy scatter.  The oracle below is the plain per-row loop over each
+``encode_to_vectors`` assembles feature vectors from map columns with
+Arrow kernels and a numpy scatter; ``encode_json_to_vectors`` runs the
+flatten kernel and the same encode kernel over JSON-string columns in
+one UDF.  The oracle below is the plain per-row loop over each
 row's feature maps (the reference's feature_encoder.py:138-226 order of
 writes), built on the same ``StringTable.encode`` / ``_miss_encode``
 arithmetic.  The suite pins the two equal over the tricky slot
 semantics: str overrides num, extras override the maps, absent slots
 are NULL, empty-table miss encode, NULL and empty maps, wide maps and a
-vector with no selected feature."""
+vector with no selected feature; for the JSON entry also JSON ``null``
+and SQL NULL roots, nested lists, bools, NaN and keys containing ``.``.
+Scoring's plan is pinned to that one Python UDF."""
 
+import json
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from tracker_trainer_spark.hashing import string_hash
 from tracker_trainer_spark.plans import physical_plan
 from tracker_trainer_spark.trainer.encode import (
     TIMESTAMP_KEY,
     _miss_encode,
+    encode_json_to_vectors,
     encode_to_vectors,
     feature_order,
 )
+from tracker_trainer_spark.trainer.flatten import flatten_json, flatten_merged
 from tracker_trainer_spark.trainer.string_tables import StringTable
 
 ROWS_SCHEMA = (
@@ -173,3 +182,144 @@ def test_encode_wide_maps_one_udf(spark):
     _same(_collect(encoded), _oracle(rows, sel, tables, SEED))
     plan = physical_plan(encoded, "simple")
     assert plan.count("EvalPython") == 1, plan
+
+
+JSON_SCHEMA = "decision_id string, t double, context string, item string, tj string"
+JSON_ROOTS = [("context", "context"), ("item", "item"), ("tj", "t")]
+
+# exercises: str overrides num on one key ("a.b" and a.b both flatten
+# to item.a.b), a key containing ".", table hit / miss, a feature with
+# no table, a bare number under root "t" that the extras column must
+# override, JSON null and SQL NULL roots, nested lists, bools, NaN (NULL
+# element), an unselected key, an all-NULL row, and rows repeating j1's
+# strings (the kernel parses and merges each distinct string once)
+JSON_ROWS = [
+    ("j1", 10.0, '{"os": "ios", "hour": 7}',
+     '{"a.b": 3, "a": {"b": "beta"}, "song": "alpha"}', "999"),
+    ("j2", 20.0, "null", '{"song": "unseen", "tags": [[1, "x"], [true]]}', None),
+    ("j3", 30.0, None, '{"a.b": 2.5, "flag": false, "n": NaN}', "null"),
+    ("j4", 40.0, '{"os": "android", "hour": 23, "junk": {"k": 1}}',
+     '{"song": "zzz", "tags": [[0.5]]}', None),
+    ("j5", 50.0, None, None, None),
+    ("j6", 60.0, '{"os": "ios", "hour": 7}',
+     '{"a.b": 3, "a": {"b": "beta"}, "song": "alpha"}', None),
+    ("j7", 70.0, '{"os": "ios", "hour": 7}',
+     '{"a.b": 3, "a": {"b": "beta"}, "song": "alpha"}', "999"),
+]
+JSON_SELECTED = ["item.a.b", "item.song", "context.os", "context.hour",
+                 "item.tags.0.0", "item.tags.0.1", "item.tags.1.0",
+                 "item.flag", "item.n", "item.absent", "t"]
+JSON_TABLES = {
+    "item.song": sorted({string_hash("alpha", SEED), string_hash("zzz", SEED)}),
+    "item.a.b": [string_hash("beta", SEED)],
+}
+
+
+def _flat_rows(rows, roots=JSON_ROOTS):
+    """JSON rows → the oracle's (id, t, y, w, num, str) rows through the
+    per-row ``flatten_json``."""
+    out = []
+    for decision_id, t, *raws in rows:
+        num, strs = {}, {}
+        for raw, (_, root) in zip(raws, roots):
+            if raw is not None:
+                flatten_json(json.loads(raw), root, num, strs)
+        out.append((decision_id, t, 0.0, 1.0, num, strs))
+    return out
+
+
+def _encode_json(spark, rows, selected, tables, roots=JSON_ROOTS, **kw):
+    df = spark.createDataFrame(rows, JSON_SCHEMA)
+    return encode_json_to_vectors(df, roots, selected, tables, SEED, **kw)
+
+
+def test_json_entry_matches_oracle(spark):
+    got = _collect(_encode_json(spark, JSON_ROWS, JSON_SELECTED, JSON_TABLES))
+    _same(got, _oracle(_flat_rows(JSON_ROWS), JSON_SELECTED, JSON_TABLES, SEED))
+    by_id = dict(got)
+    i = JSON_SELECTED.index
+    # str overrides num on the colliding key, with a table hit
+    assert by_id["j1"][i("item.a.b")] == StringTable(
+        JSON_TABLES["item.a.b"], SEED).encode("beta")
+    assert by_id["j3"][i("item.a.b")] == 2.5
+    # extras override the flattened bare number under root "t"
+    assert by_id["j1"][i("t")] == 10.0
+    # nested lists and bools are numeric slots; NaN is a NULL element
+    assert by_id["j2"][i("item.tags.0.0")] == 1.0
+    assert by_id["j2"][i("item.tags.1.0")] == 1.0
+    assert by_id["j3"][i("item.flag")] == 0.0
+    assert by_id["j3"][i("item.n")] is None
+    # no table: the empty-table miss encode
+    assert by_id["j4"][i("context.os")] == _miss_encode("android", SEED)
+    assert by_id["j5"] == [None] * (len(JSON_SELECTED) - 1) + [50.0]
+    assert by_id["j7"] == by_id["j1"][:-1] + [70.0]
+
+
+def test_json_entry_matches_map_entry_no_extras(spark):
+    """No extras: the JSON entry equals the oracle, and the map entry over
+    ``flatten_merged``'s maps of the same rows."""
+    got = _collect(_encode_json(spark, JSON_ROWS, JSON_SELECTED, JSON_TABLES,
+                                extra_num_cols=()))
+    _same(got, _oracle(_flat_rows(JSON_ROWS), JSON_SELECTED, JSON_TABLES, SEED,
+                       extras=()))
+    maps = (spark.createDataFrame(JSON_ROWS, JSON_SCHEMA)
+            .withColumn("_f", flatten_merged(JSON_ROOTS))
+            .select("decision_id", F.col("_f.num").alias("num_features"),
+                    F.col("_f.str").alias("str_features")))
+    _same(got, _collect(encode_to_vectors(maps, JSON_SELECTED, JSON_TABLES, SEED,
+                                          extra_num_cols=())))
+
+
+def test_json_entry_wide_one_udf(spark):
+    """300 slots over ≥150 flattened keys per row, nested objects and
+    lists, numeric and string values on the same key paths; the whole
+    flatten + encode is one Python UDF in the plan."""
+    n_slots = 300
+    sel = [f"item.k{j}" for j in range(0, n_slots, 2)] + \
+        [f"context.g.{j}" for j in range(n_slots // 2)]
+    tables = {f"item.k{j}": [string_hash(f"s{v}", SEED) for v in range(j % 4 + 1)]
+              for j in range(0, n_slots, 6)}
+    rows = []
+    for i in range(200):
+        item = {f"k{j}": (f"s{(i + j) % 9}" if (i + j) % 3 else float((i * j) % 97) - 40.0)
+                for j in range(i % 3, 2 * n_slots, 3)}
+        context = {"g": [(i * j) % 11 if j % 5 else f"s{j % 7}" for j in range(n_slots // 2)]}
+        rows.append((f"w{i:04d}", float(i), json.dumps(context), json.dumps(item), None))
+    assert min(len(r[3]) for r in rows) > 0
+    flat = _flat_rows(rows)
+    assert min(len(num) + len(strs) for *_, num, strs in flat) >= 150
+    encoded = _encode_json(spark, rows, sel, tables)
+    _same(_collect(encoded), _oracle(flat, sel, tables, SEED))
+    plan = physical_plan(encoded, "simple")
+    assert plan.count("EvalPython") == 1, plan
+
+
+def test_score_items_one_arrow_udf(spark):
+    """score_items is one Python round trip: its physical plan holds
+    exactly one ArrowEvalPython (flatten and encode in one UDF), and its
+    scores equal the model applied to the map entry's vectors."""
+    from pyspark.ml.regression import GBTRegressor
+
+    from tracker_trainer_spark.trainer.scoring import score_items
+    from tracker_trainer_spark.trainer.train import TrainedModel, model_input
+
+    cands = spark.createDataFrame(JSON_ROWS, JSON_SCHEMA).drop("t")
+    selected = [f for f in JSON_SELECTED if f != TIMESTAMP_KEY]
+    maps = (cands.withColumn("_f", flatten_merged(JSON_ROOTS[:2]))
+            .withColumn(TIMESTAMP_KEY, F.lit(7.0))
+            .withColumn("num_features", F.col("_f.num"))
+            .withColumn("str_features", F.col("_f.str")))
+    encoded = encode_to_vectors(maps, selected, JSON_TABLES, SEED)
+    train = model_input(encoded).withColumn("y", F.hash("item").cast("double"))
+    model = GBTRegressor(labelCol="y", maxIter=2, maxDepth=2, seed=1).fit(train)
+    tm = TrainedModel(model=model, feature_names=feature_order(selected),
+                      string_tables=JSON_TABLES, model_seed=SEED)
+
+    scored = score_items(tm, cands, now_ts=7.0)
+    plan = physical_plan(scored, "simple")
+    assert plan.count("ArrowEvalPython") == 1, plan
+    got = {r["decision_id"]: r["score"] for r in scored.collect()}
+    want = {r["decision_id"]: r["prediction"]
+            for r in model.transform(model_input(encoded)).collect()}
+    assert got == want
+    assert len(set(got.values())) > 1  # the model distinguishes the rows

@@ -8,8 +8,8 @@ The reference uses these as decision/message ids; the embedded timestamp
 drives partition dating and the future-id validity check
 (reference: src/ingest/utils.py:53-72, src/ingest/partition.py:428-429).
 
-Spark-side helpers return vectorized pandas UDF columns (Arrow batches);
-the codec itself is dependency-free pure Python.
+Spark-side helpers return vectorized UDF columns (Arrow batches); the
+codec itself is dependency-free pure Python.
 """
 
 from __future__ import annotations
@@ -17,6 +17,7 @@ from __future__ import annotations
 import datetime as _dt
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
@@ -128,15 +129,17 @@ def ksuid_column(ts_col, key_col) -> Column:
     return _ksuid_from_parts_udf(t.cast("long"), k.cast("long"))
 
 
-@F.pandas_udf(DoubleType())
-def ksuid_timestamp_udf(ids: pd.Series) -> pd.Series:
-    """Vectorized KSUID -> unix seconds (NaN for invalid ids)."""
+@F.arrow_udf(DoubleType())
+def ksuid_timestamp_udf(ids: pa.Array) -> pa.Array:
+    """Vectorized KSUID -> unix seconds (NaN for invalid ids). An Arrow
+    UDF like the trainer's flatten and encode: UDFs of one eval type in
+    a projection share one Python round trip, mixed types get one each."""
     def _ts(s):
         try:
             return timestamp_of(s)
         except (ValueError, TypeError):
             return float("nan")
-    return ids.map(_ts)
+    return pa.array([_ts(s) for s in ids.to_pylist()], pa.float64())
 
 
 def ksuid_timestamp(col) -> Column:

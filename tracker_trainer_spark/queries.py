@@ -3041,9 +3041,8 @@ def train_e2e_metrics(spark, sf_dir, model_seed: int = 7, max_features: int = 15
     from tracker_trainer_spark.ksuid import ksuid_column, ksuid_timestamp
     from tracker_trainer_spark.trainer.encode import (
         TIMESTAMP_KEY,
-        encode_to_vectors,
+        encode_json_to_vectors,
     )
-    from tracker_trainer_spark.trainer.flatten import flatten_merged
     from tracker_trainer_spark.trainer.loader import load_training_frame
     from tracker_trainer_spark.trainer.train import (
         model_input,
@@ -3124,20 +3123,12 @@ def train_e2e_metrics(spark, sf_dir, model_seed: int = 7, max_features: int = 15
         child, path, columns=["decision_id", "item", "context", "reward"],
         seed=model_seed)
     y = znormalize_reward(frame, "reward")
-    flat = (
-        frame.withColumn(
-            "_f", flatten_merged([("context", "context"), ("item", "item")]))
-        .withColumn(TIMESTAMP_KEY, ksuid_timestamp(F.col("decision_id")))
-        .select(
-            "decision_id", TIMESTAMP_KEY,
-            F.col("_f")["num"].alias("num_features"),
-            F.col("_f")["str"].alias("str_features"),
-            y.alias("y"),
-        )
-        .withColumn("w", F.lit(1.0))
-    )
-    enc = encode_to_vectors(
-        flat, [f for f in d.feature_names if f != TIMESTAMP_KEY],
+    enc = encode_json_to_vectors(
+        frame.select(
+            "item", "context", y.alias("y"),
+            ksuid_timestamp(F.col("decision_id")).alias(TIMESTAMP_KEY)),
+        [("context", "context"), ("item", "item")],
+        [f for f in d.feature_names if f != TIMESTAMP_KEY],
         d.string_tables, d.model_seed)
     pred = d.model.transform(model_input(enc))
     return pred.agg(

@@ -26,6 +26,10 @@ DEFAULT_CONF = {
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
+    # Off: to put the Python call site in error contexts, PySpark wraps
+    # every functions.* / Column call in extra py4j round trips (session
+    # lookup, conf read, origin set + clear), paid while building plans.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # At 100 TB this is set per-cluster; 32 matches the local test harness
     # and keeps sf0.1 shuffle partitions fully occupied on local[32].
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),

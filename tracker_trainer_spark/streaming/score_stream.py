@@ -5,9 +5,9 @@ online analogue scores a LIVE candidate stream (decision requests
 flowing in) with the fitted model. Two modes, matching the two batch
 APIs (trainer/scoring.py):
 
-- ``score_stream``: the scoring pipeline (flatten → encode → model
-  transform) applied directly to a streaming DataFrame — every stage is
-  narrow (Arrow kernels + model UDF, no shuffle), so Structured
+- ``score_stream``: the scoring pipeline (one Arrow UDF that flattens
+  and encodes, then the model transform) applied directly to a
+  streaming DataFrame — every stage is narrow (no shuffle), so Structured
   Streaming runs it per micro-batch with nothing stateful; latency is
   micro-batch cadence, throughput identical to batch scoring.
 - ``start_ranking_stream``: top-1-per-decision needs a per-group argmax

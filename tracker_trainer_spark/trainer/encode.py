@@ -9,11 +9,13 @@ Vector assembly (E2/P8, reference feature_encoder.py:138-226): selected
 feature names define a fixed slot order; numeric features pass through,
 string features encode via the per-feature StringTable, absent features
 are NULL elements (each backend's model input turns them into its own
-missing marker, see ``train.model_input``). ``encode_to_vectors`` is the
-one assembly path for training, batch scoring and the registry: a
-single Arrow UDF per batch over the two map columns, with the slot
-lookup done by Arrow kernels and the (bounded) string tables shipped
-in its closure.
+missing marker, see ``train.model_input``). ``_VectorKernel`` is the one
+batch encode, with two entries, each a single Arrow UDF per batch:
+- ``encode_to_vectors`` over the two map columns of ``flatten_merged``
+  (training, which also needs the maps for selection and string stats);
+- ``encode_json_to_vectors`` over the JSON-string columns, chaining
+  ``flatten.flatten_arrays`` into the kernel in the Python worker
+  (batch and streaming scoring, the registry's scoring pass).
 """
 
 from __future__ import annotations
@@ -21,11 +23,11 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..ksuid import ksuid_timestamp
-from .flatten import flatten_merged
+from .flatten import flatten_arrays, flatten_merged, json_inputs
 from .string_tables import StringTable
 
 TIMESTAMP_KEY = "t"  # reference: src/trainer/code/constants.py:5
@@ -88,51 +90,91 @@ def encode_to_vectors(df: DataFrame, feature_names: list[str],
                       out_col: str = "features") -> DataFrame:
     """P8/E2: map columns → fixed-order array<double> feature vector.
 
-    ``feature_order(feature_names, extra_num_cols)`` fixes the slots. In
-    each row a selected key's numeric value is written first, then its
-    string value (StringTable encode, or the empty-table miss encode for
-    a feature without a table) overrides it, and the extra columns
-    (``t``) override both. A slot with no value is a NULL element.
-
-    One Arrow UDF per batch: map entries are matched to slots with Arrow
-    kernels and scattered into a numpy matrix, and each distinct
-    (slot, string) pair is encoded once per batch. The string tables
-    ride in the UDF's closure, shipped with the task's Python command.
-    """
-    names = feature_order(feature_names, extra_num_cols)
-    width = len(names)
-    slot_names = pa.array(names, pa.string())
-    tables = [StringTable(string_tables[f], model_seed) if f in string_tables else None
-              for f in names]
-    extra_slots = np.array([names.index(c) for c in extra_num_cols], dtype=np.int64)
-
-    def encode_string(slot: int, s: str) -> float:
-        table = tables[slot]
-        return _miss_encode(s, model_seed) if table is None else table.encode(s)
+    ``feature_order(feature_names, extra_num_cols)`` fixes the slots; the
+    write order is ``_VectorKernel``'s. One Arrow UDF per batch over the
+    two map columns (training, which needs the maps for selection and
+    string stats anyway)."""
+    kernel = _VectorKernel(feature_names, string_tables, model_seed, extra_num_cols)
 
     @F.arrow_udf("array<double>")
     def _assemble(num: pa.Array, strs: pa.Array, extras: pa.Array) -> pa.Array:
-        n = len(num)
+        return kernel(num, strs, extras)
+
+    return df.withColumn(
+        out_col, _assemble(F.col(num_col), F.col(str_col), _extras(extra_num_cols)))
+
+
+def encode_json_to_vectors(df: DataFrame, cols_and_roots, feature_names: list[str],
+                           string_tables: dict[str, list[int]], model_seed: int,
+                           extra_num_cols: tuple = (TIMESTAMP_KEY,),
+                           out_col: str = "features") -> DataFrame:
+    """JSON-string columns → the same vector ``encode_to_vectors`` builds
+    from ``flatten_merged``'s maps, in one Arrow UDF per batch.
+
+    ``cols_and_roots`` is ``flatten_merged``'s argument. Inside the UDF
+    the flatten kernel's map arrays feed the encode kernel directly, so
+    the maps never leave the Python worker (scoring)."""
+    kernel = _VectorKernel(feature_names, string_tables, model_seed, extra_num_cols)
+    ins, roots = json_inputs(cols_and_roots)
+
+    @F.arrow_udf("array<double>")
+    def _flatten_assemble(extras: pa.Array, *columns: pa.Array) -> pa.Array:
+        return kernel(*flatten_arrays(columns, roots), extras)
+
+    return df.withColumn(out_col, _flatten_assemble(_extras(extra_num_cols), *ins))
+
+
+def _extras(extra_num_cols: tuple) -> Column:
+    return F.array(*[F.col(c).cast("double") for c in extra_num_cols]).cast("array<double>")
+
+
+class _VectorKernel:
+    """The one batch encode: (num map, str map, extras list) arrays →
+    ``array<double>`` vectors over ``feature_order(feature_names,
+    extra_num_cols)``.
+
+    In each row a selected key's numeric value is written first, then its
+    string value (StringTable encode, or the empty-table miss encode for
+    a feature without a table) overrides it, and the extras (``t``)
+    override both. A slot with no value, or NaN, is a NULL element.
+    Map entries are matched to slots with Arrow kernels and scattered
+    into a numpy matrix; each distinct (slot, string) pair is encoded
+    once per batch. The string tables ride in the UDF's closure, shipped
+    with the task's Python command."""
+
+    def __init__(self, feature_names, string_tables, model_seed, extra_num_cols):
+        names = feature_order(feature_names, extra_num_cols)
+        self.width = len(names)
+        self.slot_names = pa.array(names, pa.string())
+        self.tables = [StringTable(string_tables[f], model_seed) if f in string_tables
+                       else None for f in names]
+        self.extra_slots = np.array([names.index(c) for c in extra_num_cols],
+                                    dtype=np.int64)
+        self.model_seed = model_seed
+
+    def encode_string(self, slot: int, s: str) -> float:
+        table = self.tables[slot]
+        return _miss_encode(s, self.model_seed) if table is None else table.encode(s)
+
+    def __call__(self, num: pa.Array, strs: pa.Array, extras: pa.Array) -> pa.Array:
+        n, width = len(num), self.width
         vec = np.full((n, width), np.nan)
-        rows, slots, values = _selected_entries(num, slot_names)
+        rows, slots, values = _selected_entries(num, self.slot_names)
         vec[rows, slots] = values.to_numpy(zero_copy_only=False)
-        rows, slots, values = _selected_entries(strs, slot_names)
+        rows, slots, values = _selected_entries(strs, self.slot_names)
         codes = values.dictionary_encode()
         n_strings = len(codes.dictionary)
         pairs, inverse = np.unique(
             slots * n_strings + codes.indices.to_numpy(), return_inverse=True)
         strings = codes.dictionary.to_pylist()
-        encoded = np.array([encode_string(p // n_strings, strings[p % n_strings])
+        encoded = np.array([self.encode_string(p // n_strings, strings[p % n_strings])
                             for p in pairs.tolist()], dtype=np.float64)
         vec[rows, slots] = encoded[inverse]
-        vec[:, extra_slots] = pc.list_flatten(extras).to_numpy(
-            zero_copy_only=False).reshape(n, len(extra_slots))
+        vec[:, self.extra_slots] = pc.list_flatten(extras).to_numpy(
+            zero_copy_only=False).reshape(n, len(self.extra_slots))
         flat = vec.ravel()
         offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
         return pa.ListArray.from_arrays(offsets, pa.array(flat, mask=np.isnan(flat)))
-
-    extras = F.array(*[F.col(c).cast("double") for c in extra_num_cols]).cast("array<double>")
-    return df.withColumn(out_col, _assemble(F.col(num_col), F.col(str_col), extras))
 
 
 def _selected_entries(maps: pa.Array, slot_names: pa.Array):

@@ -5,13 +5,13 @@ The reference ships models to clients (.mlmodel / .xgb) and ranks
 on-device (its Scorer/Ranker consume the ai.improve.* metadata:
 reference src/trainer/code/model_utils.py:174-246). The engine-side
 analogue ranks candidates as a Spark job with the fitted estimator
-directly — same flatten → string-table encode → predict pipeline the
-trainer used, so a score here equals what a client computes from the
-exported artifact modulo backend.
+directly — the same flatten and encode kernels the trainer used
+(``encode.encode_json_to_vectors``), so a score here equals what a
+client computes from the exported artifact modulo backend.
 
-Scale: scoring is one narrow pass (flatten UDF + encode UDF + model
-transform), no shuffle; candidates for one decision stay in one row
-group so per-decision argmax is a groupBy over co-located rows.
+Scale: scoring is one narrow pass (one Arrow UDF that flattens and
+encodes, then the model transform), no shuffle; ranking is a window
+partitioned by decision over the scored rows.
 """
 
 from __future__ import annotations
@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .encode import TIMESTAMP_KEY, encode_to_vectors
-from .flatten import flatten_merged
+from .encode import TIMESTAMP_KEY, encode_json_to_vectors
 from .train import TrainedModel, model_input
 
 
@@ -38,24 +37,16 @@ def score_items(tm: TrainedModel, df: DataFrame,
 
     if now_ts is None:
         now_ts = _time.time()
-    flat = (
-        df.withColumn(
-            "_f", flatten_merged([(context_col, "context"), (item_col, "item")])
-        )
-        .withColumn(TIMESTAMP_KEY, F.lit(float(now_ts)))
-        .withColumn("num_features", F.col("_f")["num"])
-        .withColumn("str_features", F.col("_f")["str"])
-        .drop("_f")
-    )
-    enc = encode_to_vectors(
-        flat, [f for f in tm.feature_names if f != TIMESTAMP_KEY],
+    enc = encode_json_to_vectors(
+        df.withColumn(TIMESTAMP_KEY, F.lit(float(now_ts))),
+        [(context_col, "context"), (item_col, "item")],
+        [f for f in tm.feature_names if f != TIMESTAMP_KEY],
         tm.string_tables, tm.model_seed,
     )
     scored = tm.model.transform(model_input(enc))
     return (
         scored.withColumnRenamed("prediction", out_col)
-        .drop("features", "num_features", "str_features", TIMESTAMP_KEY,
-              "rawPrediction", "probability")
+        .drop("features", TIMESTAMP_KEY, "rawPrediction", "probability")
     )
 
 
